@@ -1,35 +1,26 @@
-"""Pure-Python raw Snappy codec (no native bindings in this environment).
+"""Raw Snappy codec, native through pyarrow's bundled libsnappy.
 
 Implements the raw Snappy block format (format description:
 https://github.com/google/snappy/blob/main/format_description.txt) —
 the format Hadoop's SnappyCodec feeds through its
 ``BlockCompressorStream`` framing (reference: ``cbits/decode.c:76-118``
-decompresses the same chunks via libsnappy).
+decompresses the same chunks via libsnappy).  Both directions run in
+C through pyarrow's bundled Snappy codec; there is no pure-Python path.
 
-Decompression handles the full tag set (literals + all three copy
-element kinds).  Compression emits a valid *literal-only* stream — every
-Snappy decoder accepts it; it trades compression ratio for zero
-dependency.  When a real binding (``snappy`` / ``cramjam``) is
-importable we delegate to it for both speed and ratio.
+The codec is named per call rather than held as a module-level
+``pa.Codec``: ``__spark_entry__`` pickles this package by value for a
+bare driver session, and a ``pa.Codec`` cannot be pickled.
 """
 
 from __future__ import annotations
 
-_native_compress = None
-_native_decompress = None
-try:  # pragma: no cover - not present in this container
-    import snappy as _pysnappy
+import pyarrow as pa
 
-    _native_compress = _pysnappy.compress
-    _native_decompress = _pysnappy.uncompress
-except ImportError:
-    try:  # pragma: no cover
-        import cramjam
-
-        _native_compress = lambda b: bytes(cramjam.snappy.compress_raw(b))  # noqa: E731
-        _native_decompress = lambda b: bytes(cramjam.snappy.decompress_raw(b))  # noqa: E731
-    except ImportError:
-        pass
+# The densest element is a copy-2: 3 input bytes emit up to 64 output
+# bytes, so no valid block decodes to more than 64/3 < 22 bytes per
+# input byte.  A larger preamble is corrupt; rejecting it up front keeps
+# a flipped varint from requesting a multi-GiB output buffer.
+_MAX_EXPANSION = 22
 
 
 class SnappyError(ValueError):
@@ -66,94 +57,24 @@ def _write_uvarint(n: int) -> bytes:
 
 
 def decompress(buf: bytes) -> bytes:
-    """Decompress one raw Snappy block."""
-    if _native_decompress is not None:
-        return _native_decompress(buf)
-    expected, pos = _read_uvarint(buf, 0)
-    out = bytearray(expected)
-    opos = 0
-    blen = len(buf)
-    while pos < blen:
-        tag = buf[pos]
-        pos += 1
-        elem_type = tag & 0x03
-        if elem_type == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nbytes = ln - 59
-                if pos + nbytes > blen:
-                    raise SnappyError("truncated literal length")
-                ln = int.from_bytes(buf[pos : pos + nbytes], "little")
-                pos += nbytes
-            ln += 1
-            if pos + ln > blen or opos + ln > expected:
-                raise SnappyError("literal overruns buffer")
-            out[opos : opos + ln] = buf[pos : pos + ln]
-            pos += ln
-            opos += ln
-            continue
-        if elem_type == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x07) + 4
-            if pos >= blen:
-                raise SnappyError("truncated copy-1")
-            offset = ((tag >> 5) << 8) | buf[pos]
-            pos += 1
-        elif elem_type == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 2 > blen:
-                raise SnappyError("truncated copy-2")
-            offset = buf[pos] | (buf[pos + 1] << 8)
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 4 > blen:
-                raise SnappyError("truncated copy-4")
-            offset = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > opos or opos + ln > expected:
-            raise SnappyError("bad copy offset/length")
-        src = opos - offset
-        if offset >= ln:
-            out[opos : opos + ln] = out[src : src + ln]
-            opos += ln
-        else:
-            # overlapping copy: byte-at-a-time semantics (RLE-style)
-            for _ in range(ln):
-                out[opos] = out[src]
-                opos += 1
-                src += 1
-    if opos != expected:
-        raise SnappyError(f"snappy output short: {opos} != {expected}")
-    return bytes(out)
+    """Decompress one raw Snappy block.
 
-
-_MAX_LITERAL = 1 << 16  # chunked literals keep decoder working sets small
+    The preamble length is passed to pyarrow as the exact output size:
+    given a larger size pyarrow returns that many bytes, the tail
+    uninitialised, instead of failing."""
+    expected, _ = _read_uvarint(buf, 0)
+    if expected > _MAX_EXPANSION * len(buf):
+        raise SnappyError(
+            f"snappy preamble claims {expected} bytes from a {len(buf)}-byte block"
+        )
+    try:
+        return pa.decompress(
+            buf, decompressed_size=expected, codec="snappy", asbytes=True
+        )
+    except (OSError, pa.ArrowException) as ex:
+        raise SnappyError(f"corrupt snappy block: {ex}") from ex
 
 
 def compress(buf: bytes) -> bytes:
-    """Compress to a valid raw Snappy block (literal-only when pure Python)."""
-    if _native_compress is not None:
-        return _native_compress(buf)
-    out = bytearray(_write_uvarint(len(buf)))
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        ln = min(_MAX_LITERAL, n - pos)
-        lm1 = ln - 1
-        if lm1 < 60:
-            out.append(lm1 << 2)
-        elif lm1 < (1 << 8):
-            out.append(60 << 2)
-            out += lm1.to_bytes(1, "little")
-        elif lm1 < (1 << 16):
-            out.append(61 << 2)
-            out += lm1.to_bytes(2, "little")
-        elif lm1 < (1 << 24):
-            out.append(62 << 2)
-            out += lm1.to_bytes(3, "little")
-        else:
-            out.append(63 << 2)
-            out += lm1.to_bytes(4, "little")
-        out += buf[pos : pos + ln]
-        pos += ln
-    return bytes(out)
+    """Compress to one raw Snappy block."""
+    return pa.compress(buf, codec="snappy", asbytes=True)

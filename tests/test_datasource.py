@@ -197,10 +197,44 @@ def test_write_jvm_interop_large_blocks(spark, tmp_path):
     )
     path = str(tmp_path / "big.seq")
     core.write_table(path, t)
+    # smaller than its user bytes: the JVM decodes our copy elements too
+    user_bytes = sum(len(k) + len(v) for k, v in zip(*t.to_pydict().values()))
+    assert os.path.getsize(path) < user_bytes
     rdd = spark.sparkContext.sequenceFile(path)
     assert rdd.count() == n
     first = dict(rdd.take(2))
     assert first[f"F{0:07X}"].endswith("0")
+
+
+def test_write_jvm_interop_incompressible_blocks(spark, tmp_path, monkeypatch):
+    """Random values barely compress, so every snappy chunk of a large
+    block sits near the encoder's worst case: each must still fit the
+    JVM's 256 KiB compressed-chunk buffer, and Hadoop must read the
+    file back exactly (the regression the large-block test above no
+    longer reaches now that its text compresses well)."""
+    from hadoop_formats_spark.seqfile import snappy
+
+    rng = np.random.default_rng(7)
+    n = 3_000  # values section ≈ 1.2 MB of random bytes per block
+    values = [rng.bytes(400) for _ in range(n)]
+    t = pa.table({"key": pa.array(range(n), pa.int64()), "value": values})
+    path = str(tmp_path / "random.seq")
+    core.write_table(path, t)
+
+    chunk_sizes = []
+    decompress = snappy.decompress
+
+    def recording(buf):
+        chunk_sizes.append(len(buf))
+        return decompress(buf)
+
+    monkeypatch.setattr(snappy, "decompress", recording)
+    assert sum(b.count for b in core.iter_blocks(path)) == n
+    assert len(chunk_sizes) > 4 and max(chunk_sizes) <= 256 * 1024
+    assert max(chunk_sizes) > core._COMPRESS_CHUNK  # the worst case was hit
+    got = dict(spark.sparkContext.sequenceFile(path).collect())
+    assert len(got) == n
+    assert all(bytes(got[i]) == v for i, v in enumerate(values))
 
 
 def test_read_jvm_written(spark, tmp_path):

@@ -399,6 +399,28 @@ def test_jaccard_cap_plan_prunes_hot_postings(spark, docs):
     assert "LeftAnti" in plan
 
 
+def test_containment_doc_freq_cap_drops_hot_shingle(spark):
+    """With ``max_doc_freq`` set, a shingle in more docs than the cap
+    counts toward neither the intersection nor the set sizes: "a b c"
+    (in all four docs) no longer pairs docs 2 and 3, and the 0/1 pair
+    keeps only its one rare shared shingle ("b c d")."""
+    docs = spark.createDataFrame(
+        [(0, "a b c d e"), (1, "a b c d f"), (2, "x y a b c"), (3, "p q a b c")],
+        "doc_id long, text string",
+    )
+
+    def pairs(**kw):
+        return {
+            (r.doc_a, r.doc_b): (r.containment, r.jaccard)
+            for r in D.shingle_containment_pairs(docs, threshold=0.0, **kw).collect()
+        }
+
+    uncapped = pairs()
+    assert uncapped[(0, 1)] == (0.667, 0.5)
+    assert uncapped[(2, 3)] == (0.333, 0.2)
+    assert pairs(max_doc_freq=2) == {(0, 1): (0.5, 0.333)}
+
+
 def test_prefix_filter_equals_exhaustive(spark, docs):
     """Prefix filtering is EXACT: output must equal the uncapped
     exhaustive Jaccard join — pairs AND values — at several thresholds
