@@ -652,7 +652,11 @@ def connected_components(
 
     Iterative min-label propagation: each round, every node takes the
     min of its own label and its neighbors' labels; rounds needed =
-    component diameter, which for near-dup clusters is tiny.  Each
+    component diameter, which for near-dup clusters is tiny.
+    ``max_iter`` (>= 1) budgets propagation hops: every component of
+    diameter <= ``max_iter`` converges, and one wider than
+    ``max_iter + 1`` (two-hop rounds round an odd budget up) raises
+    ``RuntimeError`` instead of returning partial labels.  Each
     round is one join + one aggregate (both shuffle on node id, so at
     scale consecutive rounds reuse the same hash partitioning).
     Lineage is truncated every round: with ``checkpoint_dir`` set, via
@@ -660,6 +664,8 @@ def connected_components(
     real cluster run wants; any Hadoop-compatible path works); without
     it, via ``localCheckpoint`` (blocks live only on executors — fine
     on local[N], where executor loss means the app died anyway)."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
@@ -721,10 +727,13 @@ def connected_components(
             ),
         )
 
-    # the budget in ROUNDS covers max_iter propagation hops; no
-    # confirming round is reserved because convergence is detected
-    # inside the round that reaches it (hop-2 no-op == fixed point)
-    n_rounds = (max_iter + 1) // 2 + 1
+    # the budget in ROUNDS covers max_iter propagation hops: a
+    # component of diameter d settles and is seen to settle in
+    # ceil(d / 2) rounds (the initial labels are one hop, each round
+    # two, and the round whose hop 2 is a no-op detects the fixed
+    # point), so ceil(max_iter / 2) rounds accept every d <= max_iter;
+    # an odd max_iter leaves one spare hop
+    n_rounds = (max_iter + 1) // 2
     for _ in range(n_rounds):
         h1 = _hop(labels).withColumn("prev", F.col("label"))
         new_labels = _ckpt(_hop(h1, keep=("prev",)))
@@ -746,10 +755,10 @@ def connected_components(
         # under-merge, so refuse to hand them out silently.
         raise RuntimeError(
             f"connected_components did not converge within "
-            f"{n_rounds} double-hop rounds ({n_rounds * 2} propagation "
-            f"hops, from max_iter={max_iter}; labels still changing "
-            "in the final round); raise max_iter for graphs with "
-            "long chains"
+            f"max_iter={max_iter} propagation hops ({n_rounds} "
+            "double-hop rounds; labels still changing in the final "
+            "round): a component is wider than max_iter; raise "
+            "max_iter for graphs with long chains"
         )
     return labels.select(
         F.col("src").alias("doc_id"), F.col("label").alias("group_id")

@@ -1388,15 +1388,17 @@ def _conformal_from_scored(spark, scored, mr, slope, icpt):
     # interleaved (3.67 → 4.11 s median: the chained broadcast
     # subtrees serialize work the separate jobs overlap), so coverage
     # keeps its own collect.
+    # n_cal is crossed in again after the aggregate: when no cell
+    # reaches rank k (an empty split, or k > n_cal below 9 rows) the
+    # aggregate has no input row to carry it, and n_cal is still the
+    # calibration count, 0 on an empty split.
     qrow = (
         parts.withColumn("cum_in", F.sum("cnt").over(win))
         .join(F.broadcast(offsets), "pid")
         .crossJoin(F.broadcast(kq))
         .filter(F.col("cum_in") + F.col("off") >= F.col("k"))
-        .agg(
-            F.min("res").alias("qhat_cents"),
-            F.first("n_cal").alias("n_cal"),
-        )
+        .agg(F.min("res").alias("qhat_cents"))
+        .crossJoin(F.broadcast(kq.select("n_cal")))
         .collect()[0]
     )
     qhat = qrow.qhat_cents

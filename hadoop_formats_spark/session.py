@@ -48,6 +48,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
+        .config("spark.python.daemon.module", "hadoop_formats_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -396,7 +396,10 @@ def stateful_group_stats(
     pandas groupby.  Per-key semantics are unchanged: a key's running
     (count, sum) accumulates across batches, and exactly the keys with
     input in a batch emit their updated totals (a bucket's untouched
-    members are carried in state but not re-emitted)."""
+    members are carried in state but not re-emitted).  As in
+    ``count(*), sum(v) GROUP BY k``, a NULL key is its own group, a
+    NULL value counts as an event, and ``total_value`` is NULL while a
+    key has seen no non-NULL value."""
     import pandas as pd
 
     from pyspark.sql import functions as _F
@@ -414,20 +417,24 @@ def stateful_group_stats(
         out_tv: list = []
         if chunks:
             rows = pd.concat(chunks, ignore_index=True)
-            g = rows.groupby(key_col, sort=True)[value_col].agg(
-                ["count", "sum"]
+            g = rows.groupby(key_col, sort=True, dropna=False)[value_col].agg(
+                ["size", "count", "sum"]
             )
-            for u, cnt, sm in zip(
-                g.index.to_numpy(), g["count"].to_numpy(), g["sum"].to_numpy()
+            for u, n, nonnull, sm in zip(
+                g.index.to_numpy(),
+                g["size"].to_numpy(),
+                g["count"].to_numpy(),
+                g["sum"].to_numpy(),
             ):
                 # plain python types: state values cross via pyrolite,
                 # which rejects numpy scalars
-                u = int(u)
+                u = None if pd.isna(u) else int(u)
                 ent = reg.get(u)
                 if ent is None:
-                    ent = reg[u] = [0, 0.0]
-                ent[0] += int(cnt)
-                ent[1] += float(sm)
+                    ent = reg[u] = [0, None]
+                ent[0] += int(n)
+                if nonnull:
+                    ent[1] = (ent[1] or 0.0) + float(sm)
                 out_k.append(u)
                 out_n.append(ent[0])
                 out_tv.append(ent[1])

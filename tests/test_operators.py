@@ -711,16 +711,35 @@ def test_connected_components_empty_graph(spark):
 
 
 def test_connected_components_converges_at_budget_boundary(spark):
-    # regression: an 8-node chain converges exactly in the last allowed
-    # round; the stall is only observable one round later, which the
-    # loop budget must reserve (used to raise a spurious error)
+    # regression: an 8-node chain (diameter 7) converges exactly in the
+    # last allowed round; the stall is detected inside that round, so
+    # no confirming round is needed (used to raise a spurious error)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "doc_a long, doc_b long"
     )
-    out = D.connected_components(pairs, max_iter=5).collect()
+    out = D.connected_components(pairs, max_iter=7).collect()
     assert sorted((r["doc_id"], r["group_id"]) for r in out) == [
         (i, 0) for i in range(8)
     ]
+
+
+def test_connected_components_budget_is_max_iter_hops(spark):
+    # max_iter is a budget in propagation hops: a path of diameter
+    # exactly max_iter converges, one hop longer raises (an even
+    # max_iter has no spare hop from the two-hop rounds)
+    def path(d):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(d)], "doc_a long, doc_b long"
+        )
+
+    out = D.connected_components(path(6), max_iter=6).collect()
+    assert sorted((r["doc_id"], r["group_id"]) for r in out) == [
+        (i, 0) for i in range(7)
+    ]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.connected_components(path(7), max_iter=6).collect()
+    with pytest.raises(ValueError, match="max_iter"):
+        D.connected_components(path(1), max_iter=0)
 
 
 def test_connected_components_still_raises_when_unconverged(spark):

@@ -1846,6 +1846,27 @@ def test_conformal_coverage_close_to_guarantee(spark, sf_dir):
     )
 
 
+def test_conformal_n_cal_on_empty_and_small_calibration_split(spark):
+    # no calibration row reaches rank k on an empty split (n_cal must
+    # be 0, not NULL) nor below 9 rows, where k = ceil((n + 1) * 0.9)
+    # exceeds n (n_cal must still be n); qhat is NULL in both
+    from pyspark.sql import Row
+
+    from hadoop_formats_spark.queries.features import _conformal_from_scored
+
+    mr = Row(n_train=3)
+    test_rows = [("c", 5), ("d", 7)]
+    for cal_rows, n_cal in (([], 0), ([("0", 1), ("1", 2), ("2", 3)], 3)):
+        scored = spark.createDataFrame(cal_rows + test_rows, "hx string, res bigint")
+        row = _conformal_from_scored(spark, scored, mr, 1.0, 0.0).collect()[0]
+        assert (row.n_cal, row.qhat_cents, row.n_test, row.covered) == (
+            n_cal,
+            None,
+            2,
+            0,
+        )
+
+
 # ---------------------------------------------------------------------------
 # iterative-graph runtime plans: the scan-count audit flags these three at
 # threshold 15 because the STATIC plan counts each repeated identical

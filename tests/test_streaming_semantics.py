@@ -478,6 +478,55 @@ def test_stateful_group_stats_carries_and_emits_touched_only(spark, tmp_path):
     }
 
 
+def test_stateful_group_stats_null_key_and_value(spark, tmp_path):
+    """count(*) GROUP BY semantics across two micro-batches: the NULL
+    key is its own group carried in state, a NULL value counts as an
+    event but adds nothing to the sum, and a key that has seen only
+    NULL values has a NULL total."""
+    import glob
+    import os
+    import shutil
+
+    from hadoop_formats_spark.streaming import (
+        run_available_now,
+        stateful_group_stats,
+    )
+
+    src = tmp_path / "gs_null_src"
+    src.mkdir()
+    schema = "user_id bigint, value_cents bigint"
+
+    def write_file(rows, name, mtime):
+        tmp = str(tmp_path / ("t_" + name))
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+        part = glob.glob(tmp + "/part-*.parquet")[0]
+        dest = str(src / name)
+        shutil.move(part, dest)
+        os.utime(dest, (mtime, mtime))
+
+    write_file([(1, 10), (None, 5), (1, None)], "b1.parquet", 1_700_000_000)
+    write_file([(None, 7), (2, None)], "b2.parquet", 1_700_000_100)
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    out = run_available_now(
+        stateful_group_stats(stream, "user_id", "value_cents"),
+        spark,
+        output_mode="update",
+        state_partitions=2,
+    )
+    got = {(r.user_id, r.n_events, r.total_value) for r in out.collect()}
+    assert got == {
+        (1, 2, 10.0),  # batch 1: the NULL value is counted, not summed
+        (None, 1, 5.0),  # batch 1
+        (None, 2, 12.0),  # batch 2: the NULL key's state carried over
+        (2, 1, None),  # batch 2: no non-NULL value yet
+    }
+
+
 def test_foreach_batch_upsert_idempotent_under_replay(spark, tmp_path):
     # foreachBatch is at-least-once: a FULL replay of every batch
     # (checkpoint wiped, idempotence markers kept) must leave the state
