@@ -55,8 +55,9 @@ _READY_ATTR = "_hfs_datasources_ready"
 
 
 def _ensure_ready(spark: SparkSession) -> None:
-    """Register ALL Python datasources + make the package importable
-    in Python workers, idempotently, for driver-created sessions.
+    """Ready a driver-created (bare) session, idempotently: ship the
+    package to its Python workers, pickle the package by value, then
+    ``session.ensure_ready`` (datasources + filter pushdown).
 
     Readiness is a marker attribute on the session OBJECT (not an
     ``id(spark)`` set): CPython recycles addresses, so a new session
@@ -64,44 +65,17 @@ def _ensure_ready(spark: SparkSession) -> None:
     and silently skip datasource registration (ADVICE r5 #1)."""
     if getattr(spark, _READY_ATTR, False):
         return
-    pypath = os.environ.get("PYTHONPATH", "")
-    if _REPO not in pypath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = _REPO + (os.pathsep + pypath if pypath else "")
     _ship_package(spark)
-    try:
-        # the streaming-source planner is a separate Python process that
-        # does NOT see addPyFile paths; registering the package for
-        # by-value pickling makes every pickled reader self-contained
-        from pyspark import cloudpickle
+    # the streaming-source planner is a separate Python process that
+    # does NOT see addPyFile paths; registering the package for
+    # by-value pickling makes every pickled reader self-contained
+    from pyspark import cloudpickle
 
-        import hadoop_formats_spark
+    import hadoop_formats_spark
+    from hadoop_formats_spark.session import ensure_ready
 
-        cloudpickle.register_pickle_by_value(hadoop_formats_spark)
-    except Exception:
-        pass
-    try:
-        # the reader implements pushFilters(), which Spark rejects
-        # unless this conf is on (our session factory sets it; a
-        # driver-created session may not)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass
-    # Register EVERY Python datasource this repo ships (hadoop_seq +
-    # hadoop_map/hadoop_bloommap family), mirroring session.py — a
-    # driver-created bare session has none of them, and a missing
-    # registration surfaces as DATA_SOURCE_NOT_FOUND at query time
-    # (VERDICT r4 "What's wrong" #1).  Only the benign already-registered
-    # case is swallowed; anything else is a real failure and must raise.
-    from hadoop_formats_spark.seqfile.datasource import register as _reg_seq
-    from hadoop_formats_spark.seqfile.map_datasource import register as _reg_map
-
-    for _reg in (_reg_seq, _reg_map):
-        try:
-            _reg(spark)
-        except Exception as exc:  # noqa: BLE001 — filtered below
-            msg = str(exc).lower()
-            if "already" not in msg and "exists" not in msg:
-                raise
+    cloudpickle.register_pickle_by_value(hadoop_formats_spark)
+    ensure_ready(spark)
     try:
         setattr(spark, _READY_ATTR, True)
     except Exception:

@@ -160,6 +160,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
+    from hadoop_formats_spark import REFERENCE_FIXTURES
     from hadoop_formats_spark.queries import QUERIES
     from hadoop_formats_spark.session import get_spark
 
@@ -170,7 +171,7 @@ def main() -> None:
     # datasource path (first hadoop_seq query pays ~3s of one-time setup)
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     spark.read.format("hadoop_seq").load(
-        "/root/reference/tests/text-int.seq"
+        os.path.join(REFERENCE_FIXTURES, "text-int.seq")
     ).count()
 
     # spin up the full Arrow python-worker pool before timing anything:

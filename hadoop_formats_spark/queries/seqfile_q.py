@@ -15,10 +15,12 @@ import uuid
 
 from pyspark.sql import functions as F
 
+from hadoop_formats_spark import REFERENCE_FIXTURES
+from hadoop_formats_spark.cachedir import cache_path
+
 from .registry import _has_file, publish_dir, register, table
 
-REFERENCE_TEXT_INT = "/root/reference/tests/text-int.seq"
-from hadoop_formats_spark.cachedir import cache_path
+REFERENCE_TEXT_INT = os.path.join(REFERENCE_FIXTURES, "text-int.seq")
 
 _CACHE_ROOT = cache_path("seq_cache")
 

@@ -28,7 +28,6 @@ decodes.
 
 from __future__ import annotations
 
-import io
 import os
 import struct
 
@@ -112,15 +111,9 @@ def serialize_key(value, key_class: str) -> bytes:
     if key_class == "org.apache.hadoop.io.BytesWritable":
         b = bytes(value)
         return struct.pack(">i", len(b)) + b
-    fixed = {
-        "org.apache.hadoop.io.LongWritable": ">q",
-        "org.apache.hadoop.io.IntWritable": ">i",
-        "org.apache.hadoop.io.ShortWritable": ">h",
-        "org.apache.hadoop.io.FloatWritable": ">f",
-        "org.apache.hadoop.io.DoubleWritable": ">d",
-    }
-    if key_class in fixed:
-        return struct.pack(fixed[key_class], value)
+    _, np_dtype = core.WRITABLES.get(key_class, (None, None))
+    if np_dtype not in (None, "null"):  # fixed width: big-endian bytes
+        return np.array(value, dtype=np_dtype).tobytes()
     raise core.SeqFileError(f"no bloom key serializer for {key_class}")
 
 
@@ -240,12 +233,21 @@ def read_bloom(path: str) -> DynamicBloom:
         return DynamicBloom.read(f)
 
 
+def may_contain_any(path: str, keys) -> bool:
+    """Bloom probe of a MapFile directory: False only when its ``bloom``
+    member rules out every key in ``keys`` (then no block needs
+    decoding); True when some key may be present or the directory has
+    no bloom member."""
+    if not os.path.isfile(os.path.join(path, BLOOM_FILE)):
+        return True
+    key_class = core.read_header(os.path.join(path, mapfile.DATA_FILE)).key_class
+    bloom = read_bloom(path)
+    return any(bloom.might_contain(serialize_key(k, key_class)) for k in keys)
+
+
 def bloom_map_get(path: str, key):
     """BloomMapFile.Reader.get: consult the filter first — a miss
     costs zero block decodes (the common case for probe workloads)."""
-    header = core.read_header(os.path.join(path, mapfile.DATA_FILE))
-    if os.path.isfile(os.path.join(path, BLOOM_FILE)):
-        bloom = read_bloom(path)
-        if not bloom.might_contain(serialize_key(key, header.key_class)):
-            return None
+    if not may_contain_any(path, [key]):
+        return None
     return mapfile.map_get(path, key)

@@ -1,7 +1,7 @@
 """SequenceFile (BLOCK + Snappy) format core — pure Python/numpy, no Spark.
 
 Re-implements, Spark-side, the decode semantics of the reference
-library jacobstanley/hadoop-formats (read-only at /root/reference):
+library jacobstanley/hadoop-formats:
 
 * header parse: ``src/Data/Hadoop/SequenceFile/Parser.hs:43-70``
 * record-block parse: ``Parser.hs:83-115``
@@ -18,9 +18,10 @@ Differences, deliberate (SURVEY.md §1.3, §2.1):
   little-endian read at ``Parser.hs:74`` is a quirk invisible on files
   with zero metadata entries);
 * a write path exists (the reference has none — ``README.md:5``);
-* blocks can be decoded selectively (keys only / values only / count
-  only) — the 4 sections are independently compressed
-  (``Parser.hs:104-107``), the reference always decodes both.
+* blocks can be decoded selectively (keys only / values only / neither,
+  the count fast path) — the 4 sections are independently compressed
+  (``Parser.hs:104-107``), so an unwanted column's sections are skipped
+  unread; the reference always decodes both.
 """
 
 from __future__ import annotations
@@ -65,18 +66,10 @@ WRITABLES: dict[str, tuple[pa.DataType, str | None]] = {
     "org.apache.hadoop.io.Text": (pa.string(), None),
 }
 
-ARROW_TO_CLASS = {
-    "null": "org.apache.hadoop.io.NullWritable",
-    "int16": "org.apache.hadoop.io.ShortWritable",
-    "int32": "org.apache.hadoop.io.IntWritable",
-    "int64": "org.apache.hadoop.io.LongWritable",
-    "float": "org.apache.hadoop.io.FloatWritable",
-    "double": "org.apache.hadoop.io.DoubleWritable",
-    "binary": "org.apache.hadoop.io.BytesWritable",
-    "string": "org.apache.hadoop.io.Text",
-    "large_string": "org.apache.hadoop.io.Text",
-    "large_binary": "org.apache.hadoop.io.BytesWritable",
-}
+# Arrow type name → Java class, for writers handed a plain Arrow table
+ARROW_TO_CLASS = {str(arrow_type): cls for cls, (arrow_type, _) in WRITABLES.items()}
+ARROW_TO_CLASS["large_string"] = ARROW_TO_CLASS["string"]
+ARROW_TO_CLASS["large_binary"] = ARROW_TO_CLASS["binary"]
 
 
 class SeqFileError(ValueError):
@@ -209,10 +202,13 @@ class RecordBlock:
 
 def _read_text(buf: bytes, pos: int) -> tuple[str, int]:
     """Varint-length-prefixed UTF-8 ("textWritable", Parser.hs:119-121)."""
-    n, pos = decode_vint(buf, pos)
-    if n < 0 or pos + n > len(buf):
-        raise SeqFileError("truncated text field in header")
-    return buf[pos : pos + n].decode("utf-8"), pos + n
+    try:
+        n, pos = decode_vint(buf, pos)
+        if n < 0 or pos + n > len(buf):
+            raise SeqFileError("truncated text field in header")
+        return buf[pos : pos + n].decode("utf-8"), pos + n
+    except (IndexError, UnicodeDecodeError) as ex:
+        raise SeqFileError(f"corrupt text field in header: {ex}") from ex
 
 
 def parse_header(buf: bytes) -> Header:
@@ -240,6 +236,8 @@ def parse_header(buf: bytes) -> Header:
         codec_class, pos = _read_text(buf, pos)
         if codec_class not in SUPPORTED_CODECS:
             raise SeqFileError(f"unsupported codec: {codec_class}")  # Parser.hs:62-65
+    if pos + 4 > len(buf):
+        raise SeqFileError("truncated header")
     (meta_count,) = struct.unpack(">I", buf[pos : pos + 4])  # BE, Hadoop-correct
     pos += 4
     metadata = []
@@ -327,22 +325,29 @@ def _decode_column(
     ``lengths_buf`` is either the varint-packed lengths section (block
     layout) or an already-materialized numpy length array (record/
     uncompressed layouts, where lengths come from record headers)."""
+    if java_class not in WRITABLES:
+        raise SeqFileError(f"unsupported Writable class: {java_class}")
     arrow_type, np_dtype = WRITABLES[java_class]
+    if len(lengths_buf) < count:  # every record has a length, of >= 1 byte
+        raise SeqFileError(f"lengths section too short for {count} records")
     if np_dtype == "null":
         return pa.nulls(count)  # NullWritable: zero bytes/record (Writable.hs:73-75)
     if np_dtype is not None:
         # fixed-width fast path: lengths present but ignored (decode.c:137-139)
-        arr = np.frombuffer(data_buf, dtype=np_dtype)
-        if len(arr) != count:
+        if len(data_buf) != count * int(np_dtype[2:]):
             raise SeqFileError(
-                f"fixed-width section has {len(arr)} records, expected {count}"
+                f"fixed-width section has {len(data_buf)} bytes for {count} records"
             )
+        arr = np.frombuffer(data_buf, dtype=np_dtype)
         return pa.array(arr.astype(np_dtype[1:]), type=arrow_type)
     # variable width: per-record lengths drive offset slicing
     if isinstance(lengths_buf, np.ndarray):
         lengths = lengths_buf
     else:
-        lengths = decode_vint_array(lengths_buf, count)
+        try:
+            lengths = decode_vint_array(lengths_buf, count)
+        except (IndexError, ValueError) as ex:
+            raise SeqFileError(f"corrupt lengths section: {ex}") from ex
     if lengths.sum() != len(data_buf):
         raise SeqFileError("variable-width lengths do not cover data buffer")
     data = np.frombuffer(data_buf, dtype=np.uint8)
@@ -389,9 +394,16 @@ class _RawBlock:
     sections: list[bytes]  # key lengths, keys, value lengths, values (compressed)
 
 
-def _read_raw_block(f: io.BufferedIOBase, header: Header) -> _RawBlock | None:
+def _read_raw_block(
+    f: io.BufferedIOBase,
+    header: Header,
+    file_end: int,
+    want_keys: bool = True,
+    want_values: bool = True,
+) -> _RawBlock | None:
     """Read one record block's raw bytes (``Parser.hs:83-115``).
-    Returns None at clean EOF."""
+    Returns None at clean EOF.  The sections of a column that is not
+    wanted are seeked past, not read (they stay ``b""``)."""
     offset = f.tell()
     escape = f.read(4)
     if not escape:
@@ -402,15 +414,20 @@ def _read_raw_block(f: io.BufferedIOBase, header: Header) -> _RawBlock | None:
     if sync != header.sync:
         raise SeqFileError("file is corrupt (sync mismatch)")  # Parser.hs:98-101
     count = _read_vint_stream(f)
+    if count < 0:
+        raise SeqFileError("negative record count")
     sections = []
-    for _ in range(4):
+    for want in (want_keys, want_keys, want_values, want_values):
         n = _read_vint_stream(f)
         if n < 0:
             raise SeqFileError("negative section length")
-        data = f.read(n)
-        if len(data) != n:
+        if n > file_end - f.tell():
             raise SeqFileError("truncated record block")
-        sections.append(data)
+        if want:
+            sections.append(f.read(n))
+        else:
+            f.seek(n, os.SEEK_CUR)
+            sections.append(b"")
     return _RawBlock(offset, count, sections)
 
 
@@ -499,7 +516,7 @@ def iter_blocks(
                     return
             f.seek(pos)
             while f.tell() < stop:
-                raw = _read_raw_block(f, header)
+                raw = _read_raw_block(f, header, file_end, want_keys, want_values)
                 if raw is None:
                     return
                 yield _decode_raw(
@@ -552,7 +569,6 @@ def _iter_record_batches(
     *,
     want_keys: bool = True,
     want_values: bool = True,
-    count_only: bool = False,
 ) -> Iterator[RecordBlock]:
     """Walk a RECORD-compressed / uncompressed record stream, yielding
     columnar ``RecordBlock`` batches (``_RECORD_BATCH`` records each).
@@ -570,6 +586,7 @@ def _iter_record_batches(
         decompress_value = _codec_funcs(header.codec_class)[1]
 
     chunk_size = 1 << 20
+    file_end = os.fstat(f.fileno()).st_size
     buf = b""
     base = f.tell()  # file offset of buf[0]
     pos = 0
@@ -578,6 +595,8 @@ def _iter_record_batches(
         nonlocal buf, base, pos
         if pos + n <= len(buf):
             return True
+        if base + pos + n > file_end:  # a corrupt length must not size a read
+            return False
         buf = buf[pos:]
         base += pos
         pos = 0
@@ -600,14 +619,14 @@ def _iter_record_batches(
         if not count:
             return None
         keys = values = None
-        if want_keys and not count_only:
+        if want_keys:
             keys = _decode_column(
                 header.key_class,
                 np.asarray(key_lens, dtype=np.int64),
                 b"".join(key_parts),
                 count,
             )
-        if want_values and not count_only:
+        if want_values:
             values = _decode_column(
                 header.value_class,
                 np.asarray(val_lens, dtype=np.int64),
@@ -652,20 +671,19 @@ def _iter_record_batches(
         if kl < 0 or kl > rl:
             err = SeqFileError("file is corrupt (bad key length)")
             break
-        if not count_only:
-            if want_values:
-                raw_val = buf[pos + 8 + kl : pos + 8 + rl]
-                if decompress_value is not None:
-                    try:
-                        raw_val = decompress_value(raw_val)
-                    except SeqFileError as ex:
-                        err = ex
-                        break  # record not added at all: batch stays aligned
-                val_parts.append(raw_val)
-                val_lens.append(len(raw_val))
-            if want_keys:
-                key_parts.append(buf[pos + 8 : pos + 8 + kl])
-                key_lens.append(kl)
+        if want_values:
+            raw_val = buf[pos + 8 + kl : pos + 8 + rl]
+            if decompress_value is not None:
+                try:
+                    raw_val = decompress_value(raw_val)
+                except SeqFileError as ex:
+                    err = ex
+                    break  # record not added at all: batch stays aligned
+            val_parts.append(raw_val)
+            val_lens.append(len(raw_val))
+        if want_keys:
+            key_parts.append(buf[pos + 8 : pos + 8 + kl])
+            key_lens.append(kl)
         count += 1
         pos += 8 + rl
         if count >= _RECORD_BATCH:
@@ -682,41 +700,15 @@ def _iter_record_batches(
 def iter_block_counts(
     path: str, *, start: int = 0, end: int | None = None, header: Header | None = None
 ) -> Iterator[int]:
-    """Count fast path: for BLOCK files, record counts from block
-    headers alone — no decompression (SURVEY §3 EP3, count lives at
-    ``Parser.hs:103``).  For record-oriented files the stream is walked
-    but nothing is decoded or decompressed."""
-    with open(path, "rb") as f:
-        if header is None:
-            header = parse_header(f.read(4096))
-        file_end = os.fstat(f.fileno()).st_size
-        stop = file_end if end is None else min(end, file_end)
-        if header.block_compression:
-            pos = max(start, header.header_len)
-            if start > 0:
-                pos = _find_sync(f, header, start, file_end)
-                if pos is None:
-                    return
-            f.seek(pos)
-            while f.tell() < stop:
-                offset = f.tell()
-                escape = f.read(4)
-                if not escape:
-                    return
-                if escape != SYNC_ESCAPE:
-                    raise SeqFileError("file is corrupt (bad sync escape)")
-                if f.read(16) != header.sync:
-                    raise SeqFileError("file is corrupt (sync mismatch)")
-                count = _read_vint_stream(f)
-                for _ in range(4):
-                    n = _read_vint_stream(f)
-                    f.seek(n, os.SEEK_CUR)
-                yield count
-            return
-        if not _enter_record_stream(f, header, start, stop, file_end):
-            return
-        for block in _iter_record_batches(f, header, stop, count_only=True):
-            yield block.count
+    """Count fast path: record counts with neither column decoded.  For
+    BLOCK files the counts come from block headers alone and every
+    section is seeked past, so nothing is decompressed (SURVEY §3 EP3,
+    count lives at ``Parser.hs:103``); record-oriented files are walked
+    without decoding or decompressing."""
+    for block in iter_blocks(
+        path, want_keys=False, want_values=False, start=start, end=end, header=header
+    ):
+        yield block.count
 
 
 def _find_sync(
@@ -753,15 +745,8 @@ def _verify_block_at(
         return _verify_record_at(f, header, offset, file_end)
     save = f.tell()
     try:
-        f.seek(offset + 20)
-        count = _read_vint_stream(f)
-        if count < 0:
-            return False
-        for _ in range(4):
-            n = _read_vint_stream(f)
-            if n < 0 or f.tell() + n > file_end:
-                return False
-            f.seek(n, os.SEEK_CUR)
+        f.seek(offset)
+        _read_raw_block(f, header, file_end, want_keys=False, want_values=False)
         return True
     except SeqFileError:
         return False
@@ -1087,7 +1072,4 @@ def write_table(
         codec=codec,
     ) as w:
         for batch in table.to_batches(max_chunksize=block_records):
-            w.write_batch(
-                pa.concat_arrays(batch.column(0).chunks) if hasattr(batch.column(0), "chunks") else batch.column(0),
-                batch.column(1),
-            )
+            w.write_batch(batch.column(0), batch.column(1))

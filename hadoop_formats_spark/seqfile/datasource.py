@@ -28,10 +28,10 @@ single thread — ``SequenceFile.hs:81-89``; we must split for 100 TB):
   fail-stop ``Stream.Error``, ``SequenceFile.hs:91-95``) and
   ``PERMISSIVE`` (skip corrupt remainder of a split).
 
-Usage::
+Usage (``get_spark`` sessions are ready already)::
 
-    from hadoop_formats_spark.seqfile.datasource import register
-    register(spark)
+    from hadoop_formats_spark.session import ensure_ready
+    ensure_ready(spark)
     df = spark.read.format("hadoop_seq").load("/data/*.seq")
     df.filter(df.key > 10).select("value").show()
 """
@@ -64,43 +64,20 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    NullType,
-    ShortType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
+from pyspark.sql.types import LongType, StructField, StructType
 
 from . import core
 
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
 
-_ARROW_TO_SPARK = {
-    "null": NullType(),
-    "int16": ShortType(),
-    "int32": IntegerType(),
-    "int64": LongType(),
-    "float": FloatType(),
-    "double": DoubleType(),
-    "binary": BinaryType(),
-    "string": StringType(),
-}
-
-_SPARK_TO_CLASS = {
-    "void": "org.apache.hadoop.io.NullWritable",
-    "smallint": "org.apache.hadoop.io.ShortWritable",
-    "int": "org.apache.hadoop.io.IntWritable",
-    "bigint": "org.apache.hadoop.io.LongWritable",
-    "float": "org.apache.hadoop.io.FloatWritable",
-    "double": "org.apache.hadoop.io.DoubleWritable",
-    "binary": "org.apache.hadoop.io.BytesWritable",
-    "string": "org.apache.hadoop.io.Text",
+# writer ``codec`` short names
+_CODEC_NAMES = {
+    "snappy": core.SNAPPY_CODEC,
+    "default": core.DEFAULT_CODEC,
+    "deflate": core.DEFAULT_CODEC,
+    "gzip": core.GZIP_CODEC,
+    "bzip2": core.BZIP2_CODEC,
 }
 
 
@@ -181,8 +158,7 @@ class SeqFileDataSource(DataSource):
         for name, cls in (("key", header.key_class), ("value", header.value_class)):
             if name not in wanted:
                 continue
-            arrow_type, _ = core.WRITABLES[cls]
-            fields.append(StructField(name, _ARROW_TO_SPARK[str(arrow_type)], True))
+            fields.append(StructField(name, from_arrow_type(core.WRITABLES[cls][0]), True))
         return StructType(fields)
 
     def _wanted_columns(self) -> list[str]:
@@ -270,7 +246,10 @@ class SeqFileReader(DataSourceReader):
             self._arrow_filter = combined
 
     def partitions(self) -> list[SeqSplit]:
-        sizes = {p: os.path.getsize(p) for p in self.paths}
+        return self._plan(self.paths)
+
+    def _plan(self, paths: list[str]) -> list[SeqSplit]:
+        sizes = {p: os.path.getsize(p) for p in paths}
         split_size = self.split_size
         if split_size <= 0:
             # auto-size: ~1 split per visible core, clamped to
@@ -293,7 +272,7 @@ class SeqFileReader(DataSourceReader):
             )
         ranges: list[tuple[str, int, int]] = []
         exact: set[tuple[str, int]] = set()
-        for path in self.paths:
+        for path in paths:
             size = sizes[path]
             if size == 0:
                 continue
@@ -329,7 +308,7 @@ class SeqFileReader(DataSourceReader):
         if bin_ranges:
             splits.append(_mk(bin_ranges))
         if not splits:  # Spark requires ≥1 partition
-            splits.append(SeqSplit(((self.paths[0], 0, 0),)))
+            splits.append(SeqSplit(((paths[0], 0, 0),)))
         return splits
 
     def read(self, split: SeqSplit) -> Iterator[pa.RecordBatch]:
@@ -344,12 +323,7 @@ class SeqFileReader(DataSourceReader):
     ) -> Iterator[pa.RecordBatch]:
         if end <= start:
             return
-        if self.block_counts:
-            counts = core.iter_block_counts(path, start=start, end=end)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(list(counts), type=pa.int64())], names=["block_records"]
-            )
-            return
+        # block_counts reads with neither column wanted: counts only
         want_keys = "key" in self.columns
         want_values = "value" in self.columns
         blocks = core.iter_blocks(
@@ -360,15 +334,19 @@ class SeqFileReader(DataSourceReader):
             end=end,
             exact_start=exact,
         )
+        counts = []
         while True:
             try:
                 block = next(blocks)
             except StopIteration:
-                return
+                break
             except core.SeqFileError:
                 if self.mode == "PERMISSIVE":
-                    return  # fail-stop for this range; keep other ranges
+                    break  # fail-stop for this range; keep other ranges
                 raise
+            if self.block_counts:
+                counts.append(block.count)
+                continue
             arrays, names = [], []
             if want_keys:
                 arrays.append(block.keys)
@@ -384,6 +362,10 @@ class SeqFileReader(DataSourceReader):
                         yield b
             else:
                 yield batch
+        if self.block_counts:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(counts, type=pa.int64())], names=["block_records"]
+            )
 
 
 class SeqFileStreamReader(DataSourceStreamReader):
@@ -426,12 +408,7 @@ class SeqFileStreamReader(DataSourceStreamReader):
         ]
         if not new_files:
             return [SeqSplit(((self._root, 0, 0),))]  # empty batch
-        saved_paths = self._batch.paths
-        try:
-            self._batch.paths = sorted(new_files)
-            return self._batch.partitions()
-        finally:
-            self._batch.paths = saved_paths
+        return self._batch._plan(sorted(new_files))
 
     def read(self, split: SeqSplit):
         yield from self._batch.read(split)
@@ -442,39 +419,48 @@ class SeqFileStreamReader(DataSourceStreamReader):
 
 @dataclass
 class SeqCommit(WriterCommitMessage):
+    """One task's output: the file or MapFile directory it wrote ("" when
+    it wrote none) and its row count."""
+
     path: str
     rows: int
 
 
-class SeqFileWriter(DataSourceArrowWriter):
-    def __init__(self, options, schema: StructType, overwrite: bool):
+class KeyValueWriter(DataSourceArrowWriter):
+    """Options every (key, value) writer shares, parsed once: ``path``,
+    the schema's two Writable classes, ``block_records`` (default per
+    format), ``compression_type`` and ``codec`` (class name or short
+    name)."""
+
+    format_name = "hadoop_seq"
+    default_block_records = 65536
+
+    def __init__(self, options, schema: StructType):
         self.dir = options.get("path")
         if not self.dir:
-            raise ValueError("hadoop_seq write requires a path")
+            raise ValueError(f"{self.format_name} write requires a path")
         if len(schema.fields) != 2:
             raise ValueError(
-                f"hadoop_seq writes (key, value) DataFrames; got {len(schema.fields)} columns"
+                f"{self.format_name} writes (key, value) DataFrames; "
+                f"got {len(schema.fields)} columns"
             )
         self.classes = []
         for f in schema.fields:
-            cls = _SPARK_TO_CLASS.get(f.dataType.simpleString())
+            cls = core.ARROW_TO_CLASS.get(str(to_arrow_type(f.dataType)))
             if cls is None:
                 raise ValueError(
                     f"column {f.name}: type {f.dataType.simpleString()} has no Writable mapping"
                 )
             self.classes.append(cls)
-        self.block_records = int(options.get("block_records", 65536))
+        self.block_records = int(options.get("block_records", self.default_block_records))
         self.compression_type = options.get("compression_type", "block").lower()
         codec = options.get("codec", core.SNAPPY_CODEC)
-        # accept short names: snappy, default, gzip, bzip2
-        short = {
-            "snappy": core.SNAPPY_CODEC,
-            "default": core.DEFAULT_CODEC,
-            "deflate": core.DEFAULT_CODEC,
-            "gzip": core.GZIP_CODEC,
-            "bzip2": core.BZIP2_CODEC,
-        }
-        self.codec = short.get(codec.lower(), codec)
+        self.codec = _CODEC_NAMES.get(codec.lower(), codec)
+
+
+class SeqFileWriter(KeyValueWriter):
+    def __init__(self, options, schema: StructType, overwrite: bool):
+        super().__init__(options, schema)
         self.metadata = sorted(
             (k[len("metadata."):], v)
             for k, v in options.items()
@@ -486,40 +472,51 @@ class SeqFileWriter(DataSourceArrowWriter):
                     os.remove(os.path.join(self.dir, f))
         os.makedirs(self.dir, exist_ok=True)
 
-    def write(self, iterator: Iterator[pa.RecordBatch]) -> SeqCommit:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        name = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.seq"
-        path = os.path.join(self.dir, name)
-        # write under a dot-prefixed name (readers skip dotfiles), then
-        # rename in atomically — files only ever appear fully written,
-        # which the streaming source relies on
-        tmp = os.path.join(self.dir, "." + name)
+    def write_part(self, path: str, batches: Iterator[pa.RecordBatch]) -> SeqCommit:
+        """Write ``batches`` as one SequenceFile at ``path``.  The file is
+        opened on the first batch, so an empty partition writes none; a
+        failed write removes its partial file."""
         rows = 0
         writer = None
         try:
-            for batch in iterator:
+            for batch in batches:
                 if writer is None:
                     writer = core.SeqFileWriter(
-                        tmp,
-                        self.classes[0],
-                        self.classes[1],
+                        path,
+                        *self.classes,
                         block_records=self.block_records,
                         compression_type=self.compression_type,
                         codec=self.codec,
                         metadata=self.metadata,
                     )
-                keys = batch.column(0).cast(core.WRITABLES[self.classes[0]][0])
-                values = batch.column(1).cast(core.WRITABLES[self.classes[1]][0])
-                writer.write_batch(keys, values)
+                writer.write_batch(batch.column(0), batch.column(1))
                 rows += batch.num_rows
-        finally:
+        except BaseException:
+            # a retried task never reuses this name, and abort() sees
+            # only paths from RETURNED commit messages
             if writer is not None:
                 writer.close()
-        if writer is not None:
-            os.rename(tmp, path)
+                os.remove(path)
+            raise
+        if writer is None:
+            return SeqCommit("", 0)
+        writer.close()
         return SeqCommit(path, rows)
+
+    def write(self, iterator: Iterator[pa.RecordBatch]) -> SeqCommit:
+        from pyspark import TaskContext
+
+        pid = TaskContext.get().partitionId()
+        name = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.seq"
+        # write under a dot-prefixed name (readers skip dotfiles), then
+        # rename in atomically — files only ever appear fully written,
+        # which the streaming source relies on
+        tmp, final = os.path.join(self.dir, "." + name), os.path.join(self.dir, name)
+        commit = self.write_part(tmp, iterator)
+        if commit.path:
+            os.rename(tmp, final)
+            commit.path = final
+        return commit
 
 
 class SeqFileStreamWriter(DataSourceStreamArrowWriter):
@@ -543,49 +540,15 @@ class SeqFileStreamWriter(DataSourceStreamArrowWriter):
         # live temp files of another writer targeting the same dir
         self._token = uuid.uuid4().hex[:8]
 
-    def write(self, iterator: Iterator[pa.RecordBatch]) -> "SeqCommit":
+    def write(self, iterator: Iterator[pa.RecordBatch]) -> SeqCommit:
         from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        w = self._w
+        pid = TaskContext.get().partitionId()
         tmp = os.path.join(
-            w.dir,
+            self._w.dir,
             f".stream-{self._token}-{uuid.uuid4().hex[:8]}-{pid:05d}.seq",
         )
-        rows = 0
-        writer = None
-        try:
-            for batch in iterator:
-                if writer is None:
-                    writer = core.SeqFileWriter(
-                        tmp,
-                        w.classes[0],
-                        w.classes[1],
-                        block_records=w.block_records,
-                        compression_type=w.compression_type,
-                        codec=w.codec,
-                        metadata=w.metadata,
-                    )
-                keys = batch.column(0).cast(core.WRITABLES[w.classes[0]][0])
-                values = batch.column(1).cast(core.WRITABLES[w.classes[1]][0])
-                writer.write_batch(keys, values)
-                rows += batch.num_rows
-        except BaseException:
-            # A failed/retried task would otherwise orphan its temp file
-            # forever: abort() only sees paths from RETURNED commit
-            # messages, and the uuid in the name means a retry never
-            # overwrites it.  Clean up before re-raising.
-            if writer is not None:
-                writer.close()
-                writer = None
-            if os.path.exists(tmp):
-                os.remove(tmp)
-            raise
-        finally:
-            if writer is not None:
-                writer.close()
-        return SeqCommit(tmp if writer is not None else "", rows)
+        return self._w.write_part(tmp, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         for i, m in enumerate(messages):
@@ -611,15 +574,9 @@ class SeqFileStreamWriter(DataSourceStreamArrowWriter):
                 os.remove(m.path)
 
 
-def register(spark) -> None:
-    spark.dataSource.register(SeqFileDataSource)
-
-
 def read_metadata(path: str) -> dict[str, str]:
     """File-header metadata pairs of one SequenceFile (SURVEY R18)."""
-    from . import core as _core
-
-    return dict(_core.read_header(path).metadata)
+    return dict(core.read_header(path).metadata)
 
 
 def read_sequence_file(spark, path: str, *, columns: str | None = None):

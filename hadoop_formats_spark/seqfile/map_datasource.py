@@ -39,17 +39,11 @@ from pyspark.sql.datasource import (
     In,
     LessThan,
     LessThanOrEqual,
-    WriterCommitMessage,
-    DataSourceArrowWriter,
 )
 from pyspark.sql.types import StructType
 
 from . import core, mapfile
-from .datasource import (
-    SeqFileDataSource,
-    SeqFileReader,
-    _SPARK_TO_CLASS,
-)
+from .datasource import KeyValueWriter, SeqCommit, SeqFileDataSource, SeqFileReader
 
 
 def _expand_map_dirs(path: str) -> list[str]:
@@ -111,23 +105,14 @@ class MapFileDataSource(SeqFileDataSource):
         )
 
 
-def _typed_bound(raw: str, arrow_type: pa.DataType):
-    """Cast an option string to the key column's type."""
-    if pa.types.is_integer(arrow_type):
-        return int(raw)
-    if pa.types.is_floating(arrow_type):
-        return float(raw)
-    return raw
-
-
 class MapFileReader(SeqFileReader):
     def __init__(self, source: MapFileDataSource, schema: StructType):
         super().__init__(source, schema)
         key_type = core.read_header(self.paths[0]).arrow_schema().field("key").type
         lo = source.options.get("key_lower")
         hi = source.options.get("key_upper")
-        self._key_lower = _typed_bound(lo, key_type) if lo is not None else None
-        self._key_upper = _typed_bound(hi, key_type) if hi is not None else None
+        self._key_lower = mapfile._key_from_str(lo, key_type) if lo is not None else None
+        self._key_upper = mapfile._key_from_str(hi, key_type) if hi is not None else None
         if self._key_lower is not None or self._key_upper is not None:
             import pyarrow.compute as pc
 
@@ -192,58 +177,20 @@ class MapFileReader(SeqFileReader):
             return (0, size)
         map_dir = os.path.dirname(path)
         if self._eq_keys is not None and not self._has_range_filter:
-            from . import bloom as _bloom
+            from .bloom import may_contain_any
 
-            if os.path.isfile(os.path.join(map_dir, _bloom.BLOOM_FILE)):
-                header = core.read_header(path)
-                bl = _bloom.read_bloom(map_dir)
-                if not any(
-                    bl.might_contain(
-                        _bloom.serialize_key(k, header.key_class)
-                    )
-                    for k in self._eq_keys
-                ):
-                    return (0, 0)
+            if not may_contain_any(map_dir, self._eq_keys):
+                return (0, 0)
         idx = mapfile.read_index(map_dir)
         return idx.range_bounds(self._key_lower, self._key_upper)
 
 
-from dataclasses import dataclass
+class MapFileWriter(KeyValueWriter):
+    format_name = "hadoop_map"
+    default_block_records = 4096
 
-
-@dataclass
-class MapCommit(WriterCommitMessage):
-    path: str
-    rows: int
-
-
-class MapFileWriter(DataSourceArrowWriter):
     def __init__(self, options, schema: StructType, overwrite: bool):
-        self.dir = options.get("path")
-        if not self.dir:
-            raise ValueError("hadoop_map write requires a path")
-        if len(schema.fields) != 2:
-            raise ValueError(
-                f"hadoop_map writes (key, value) DataFrames; got "
-                f"{len(schema.fields)} columns"
-            )
-        for f in schema.fields:
-            if _SPARK_TO_CLASS.get(f.dataType.simpleString()) is None:
-                raise ValueError(
-                    f"column {f.name}: type {f.dataType.simpleString()} "
-                    "has no Writable mapping"
-                )
-        self.block_records = int(options.get("block_records", 4096))
-        self.compression_type = options.get("compression_type", "block").lower()
-        codec = options.get("codec", core.SNAPPY_CODEC)
-        short = {
-            "snappy": core.SNAPPY_CODEC,
-            "default": core.DEFAULT_CODEC,
-            "deflate": core.DEFAULT_CODEC,
-            "gzip": core.GZIP_CODEC,
-            "bzip2": core.BZIP2_CODEC,
-        }
-        self.codec = short.get(codec.lower(), codec)
+        super().__init__(options, schema)
         self.assume_sorted = options.get("assume_sorted", "").lower() == "true"
         self.bloom = options.get("bloom", "").lower() == "true"
         self.bloom_error_rate = float(options.get("bloom_error_rate", 0.005))
@@ -256,7 +203,7 @@ class MapFileWriter(DataSourceArrowWriter):
                     shutil.rmtree(full)
         os.makedirs(self.dir, exist_ok=True)
 
-    def write(self, iterator: Iterator[pa.RecordBatch]) -> MapCommit:
+    def write(self, iterator: Iterator[pa.RecordBatch]) -> SeqCommit:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -265,7 +212,7 @@ class MapFileWriter(DataSourceArrowWriter):
         batches = list(iterator)
         rows = sum(b.num_rows for b in batches)
         if rows == 0:
-            return MapCommit("", 0)
+            return SeqCommit("", 0)
         table = pa.Table.from_batches(batches)
         opts = dict(
             block_records=self.block_records,
@@ -283,8 +230,4 @@ class MapFileWriter(DataSourceArrowWriter):
             mapfile.write_map_dir(tmp, table, **opts)
         final = os.path.join(self.dir, name)
         os.rename(tmp, final)
-        return MapCommit(final, rows)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(MapFileDataSource)
+        return SeqCommit(final, rows)

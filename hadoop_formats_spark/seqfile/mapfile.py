@@ -120,12 +120,7 @@ def write_map_dir(
         codec=codec,
     ) as w:
         for batch in table.to_batches(max_chunksize=block_records):
-            keys = (
-                pa.concat_arrays(batch.column(0).chunks)
-                if hasattr(batch.column(0), "chunks")
-                else batch.column(0)
-            )
-            values = batch.column(1)
+            keys, values = batch.column(0), batch.column(1)
             # Index position = the sync marker introducing this batch,
             # so it is a valid seek target for both our range reader
             # (resync-at-start) and Hadoop's SequenceFile.Reader.seek.

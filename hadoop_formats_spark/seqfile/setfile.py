@@ -53,12 +53,8 @@ def set_contains(path: str, key) -> bool:
     """SetFile membership (``SetFile.Reader.seek``-and-match): bloom
     first when present, then index binary search + one block scan.
     (``map_get`` can't express this — a NullWritable hit IS None.)"""
-    if os.path.isfile(os.path.join(path, _bloom.BLOOM_FILE)):
-        header = core.read_header(os.path.join(path, mapfile.DATA_FILE))
-        if not _bloom.read_bloom(path).might_contain(
-            _bloom.serialize_key(key, header.key_class)
-        ):
-            return False
+    if not _bloom.may_contain_any(path, [key]):
+        return False
     idx = mapfile.read_index(path)
     if not idx.positions:
         return False

@@ -43,7 +43,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -53,12 +52,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    from .seqfile.datasource import register
-    from .seqfile.map_datasource import register as register_map
-
-    for reg in (register, register_map):
-        try:
-            reg(spark)
-        except Exception:
-            pass  # already registered in this JVM
+    ensure_ready(spark)
     return spark
+
+
+def ensure_ready(spark: SparkSession) -> None:
+    """Register this package's Python datasources (``hadoop_seq`` and
+    ``hadoop_map``) on ``spark`` and turn on the filter pushdown their
+    readers implement (Spark rejects ``pushFilters`` without it).
+    Idempotent: registering a name again replaces it.  A registration
+    error raises here, not later as DATA_SOURCE_NOT_FOUND."""
+    from .seqfile.datasource import SeqFileDataSource
+    from .seqfile.map_datasource import MapFileDataSource
+
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    for source in (SeqFileDataSource, MapFileDataSource):
+        spark.dataSource.register(source)

@@ -1,15 +1,19 @@
-"""Golden interop tests: parse the two fixtures committed with the
-reference (generated by Hadoop's own SequenceFile.Writer —
-tests/MakeSequenceFiles.java:16-29) and assert known invariants
-(SURVEY §5): 100,000 records each, 2 blocks, key patterns."""
+"""Golden interop tests: parse the two reference fixtures (written by
+Hadoop's own SequenceFile.Writer to the reference's recipe,
+tests/MakeSequenceFiles.java:16-29, see tools/make_jvm_fixtures.py) and
+assert known invariants (SURVEY §5): 100,000 records each, 2 blocks,
+key patterns."""
+
+import os
 
 import pyarrow as pa
 import pytest
 
+from hadoop_formats_spark import REFERENCE_FIXTURES
 from hadoop_formats_spark.seqfile import core
 
-TEXT_INT = "/root/reference/tests/text-int.seq"
-LONG_DOUBLE = "/root/reference/tests/long-double.seq"
+TEXT_INT = os.path.join(REFERENCE_FIXTURES, "text-int.seq")
+LONG_DOUBLE = os.path.join(REFERENCE_FIXTURES, "long-double.seq")
 
 
 def test_header_text_int():

@@ -10,14 +10,15 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_formats_spark import REFERENCE_FIXTURES
 from hadoop_formats_spark.seqfile import core
 from hadoop_formats_spark.seqfile.datasource import (
     read_sequence_file,
     sequence_file_count,
 )
 
-TEXT_INT = "/root/reference/tests/text-int.seq"
-LONG_DOUBLE = "/root/reference/tests/long-double.seq"
+TEXT_INT = os.path.join(REFERENCE_FIXTURES, "text-int.seq")
+LONG_DOUBLE = os.path.join(REFERENCE_FIXTURES, "long-double.seq")
 
 
 def test_read_reference_fixture_count(spark):

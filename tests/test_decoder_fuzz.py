@@ -1,0 +1,133 @@
+"""Decoder fuzz: damaged SequenceFiles fail only with ``SeqFileError``.
+
+Inputs are our writer's output (block / record / none layouts, Snappy
+and Default codecs) and the Hadoop-written files in ``tests/data/jvm/``.
+Every truncation offset through a file's first block, plus random bit
+flips, must make ``iter_blocks`` and ``iter_block_counts`` either return
+or raise ``SeqFileError`` — the one error PERMISSIVE mode catches.  On a
+truncation, the in-process PERMISSIVE reader returns a prefix of the
+clean records."""
+
+from __future__ import annotations
+
+import glob
+import hashlib
+import os
+
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from hadoop_formats_spark import REFERENCE_FIXTURES
+from hadoop_formats_spark.seqfile import core
+from hadoop_formats_spark.seqfile.datasource import SeqFileDataSource
+
+_LAYOUTS = [
+    (layout, codec)
+    for layout in ("block", "record", "none")
+    for codec in (core.SNAPPY_CODEC, core.DEFAULT_CODEC)
+    if not (layout == "none" and codec == core.DEFAULT_CODEC)
+]
+
+
+N_RECORDS = 40
+
+
+def _writer_output(path: str, layout: str, codec: str) -> str:
+    """40 records in blocks of 10; the ~70-byte records put the record
+    layouts' first sync marker after about 27 records."""
+    table = pa.table(
+        {
+            "key": pa.array([f"k{i:04d}" for i in range(N_RECORDS)]),
+            "value": pa.array(
+                [hashlib.sha256(b"%d" % i).hexdigest() for i in range(N_RECORDS)]
+            ),
+        }
+    )
+    core.write_table(path, table, block_records=10, compression_type=layout, codec=codec)
+    return path
+
+
+def _walk_counts(path: str) -> None:
+    try:
+        sum(core.iter_block_counts(path))
+    except core.SeqFileError:
+        pass
+
+
+def _walk(path: str) -> None:
+    """Drive both block walks to the end; any error must be SeqFileError."""
+    _walk_counts(path)
+    try:
+        for _ in core.iter_blocks(path):
+            pass
+    except core.SeqFileError:
+        pass
+
+
+def _first_block_end(path: str, data: bytes) -> int:
+    """Offset just past the first block: the second block's sync escape
+    (BLOCK layout) or the end of the first sync marker (record layouts)."""
+    header = core.read_header(path)
+    sync = data.find(core.SYNC_ESCAPE + header.sync, header.header_len + 1)
+    assert sync > 0
+    return sync if header.block_compression else sync + 20
+
+
+def _permissive_rows(path: str, schema) -> list[tuple]:
+    src = SeqFileDataSource({"path": path, "mode": "PERMISSIVE"})
+    reader = src.reader(schema)
+    rows = []
+    for split in reader.partitions():
+        for batch in reader.read(split):
+            rows.extend(zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()))
+    return rows
+
+
+@pytest.mark.parametrize("layout,codec", _LAYOUTS, ids=lambda v: str(v).rsplit(".", 1)[-1])
+def test_every_truncation_through_first_block(tmp_path, layout, codec):
+    clean_path = _writer_output(str(tmp_path / "clean.seq"), layout, codec)
+    data = open(clean_path, "rb").read()
+    clean_src = SeqFileDataSource({"path": clean_path})
+    schema = clean_src.schema()
+    clean = _permissive_rows(clean_path, schema)
+    assert len(clean) == N_RECORDS
+    cut = str(tmp_path / "cut.seq")
+    for n in range(_first_block_end(clean_path, data) + 1):
+        with open(cut, "wb") as f:
+            f.write(data[:n])
+        _walk_counts(cut)
+        # PERMISSIVE catches SeqFileError only: any other error escapes
+        rows = _permissive_rows(cut, schema)
+        assert rows == clean[: len(rows)], f"truncated at {n}"
+
+
+@pytest.fixture(scope="module")
+def fuzz_inputs(tmp_path_factory) -> tuple[str, list[bytes]]:
+    """(scratch path for the damaged file, the undamaged inputs)."""
+    root = str(tmp_path_factory.mktemp("fuzz"))
+    files = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.seq")))
+    files += [
+        _writer_output(os.path.join(root, f"{layout}-{i}.seq"), layout, codec)
+        for i, (layout, codec) in enumerate(_LAYOUTS)
+    ]
+    return os.path.join(root, "flipped.seq"), [open(p, "rb").read() for p in files]
+
+
+@settings(max_examples=200, deadline=None)
+@given(which=st.integers(min_value=0), head_bias=st.booleans(), draw=st.data())
+def test_bit_flips_raise_only_seqfile_error(fuzz_inputs, which, head_bias, draw):
+    path, inputs = fuzz_inputs
+    data = bytearray(inputs[which % len(inputs)])
+    # half the examples aim at the header and first block header, where
+    # a flipped bit reaches the most distinct parse paths
+    span = min(len(data), 300) if head_bias else len(data)
+    flips = draw.draw(
+        st.lists(st.tuples(st.integers(0, span - 1), st.integers(0, 7)), min_size=1, max_size=3)
+    )
+    for where, bit in flips:
+        data[where] ^= 1 << bit
+    with open(path, "wb") as f:
+        f.write(bytes(data))
+    _walk(path)

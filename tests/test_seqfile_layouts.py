@@ -13,9 +13,8 @@ import os
 import pyarrow as pa
 import pytest
 
+from hadoop_formats_spark import REFERENCE_FIXTURES as DATA
 from hadoop_formats_spark.seqfile import core
-
-DATA = os.path.join(os.path.dirname(__file__), "data", "jvm")
 
 JVM_FIXTURES = [
     "rec_default.seq",
@@ -101,6 +100,33 @@ def test_record_stream_counts_without_decode(tmp_path):
     p = str(tmp_path / "f.seq")
     core.write_table(p, t, compression_type="record", codec=core.DEFAULT_CODEC)
     assert sum(core.iter_block_counts(p)) == 5000
+
+
+def test_block_counts_honour_exact_start(tmp_path):
+    """The datasource's count path seeks straight to an exact range start
+    (a MapFile index position) like the row path does.  Here the start is
+    the second record of a record-layout file, where no sync marker
+    follows for ~2 KB: resyncing instead would count none of the records
+    before that sync."""
+    import struct
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from hadoop_formats_spark.seqfile.datasource import SeqFileDataSource
+
+    t = _sample_table(500)
+    p = str(tmp_path / "f.seq")
+    core.write_table(p, t, compression_type="none")
+    header = core.read_header(p)
+    with open(p, "rb") as f:
+        f.seek(header.header_len)
+        (first_len,) = struct.unpack(">i", f.read(4))
+    second = header.header_len + 8 + first_len
+    src = SeqFileDataSource({"path": p, "block_counts": "true"})
+    reader = src.reader(StructType([StructField("block_records", LongType(), False)]))
+    size = os.path.getsize(p)
+    (batch,) = reader._read_range(p, second, size, exact=True)
+    assert sum(batch.column(0).to_pylist()) == t.num_rows - 1
 
 
 def test_uncompressed_long_double_roundtrip(tmp_path):

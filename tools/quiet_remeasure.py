@@ -29,6 +29,7 @@ def main() -> int:
         print("usage: quiet_remeasure.py sf_dir n query ...", file=sys.stderr)
         return 2
 
+    from hadoop_formats_spark import REFERENCE_FIXTURES
     from hadoop_formats_spark.queries import QUERIES
     from hadoop_formats_spark.session import get_spark
 
@@ -38,7 +39,7 @@ def main() -> int:
     # python-worker pool (bench.py's import-storm note)
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
     spark.read.format("hadoop_seq").load(
-        "/root/reference/tests/text-int.seq"
+        os.path.join(REFERENCE_FIXTURES, "text-int.seq")
     ).count()
 
     def _noop(it):

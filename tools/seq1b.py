@@ -118,11 +118,8 @@ def gen_all() -> None:
 
 def _spark():
     from hadoop_formats_spark.session import get_spark
-    from hadoop_formats_spark.seqfile.datasource import register
 
-    spark = get_spark()
-    register(spark)
-    return spark
+    return get_spark()
 
 
 def _timed(fn, n=2):
