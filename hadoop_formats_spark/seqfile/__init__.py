@@ -5,7 +5,6 @@ from .core import (  # noqa: F401
     SeqFileWriter,
     iter_block_counts,
     iter_blocks,
-    parse_header,
     read_file,
     read_header,
     write_table,

@@ -35,7 +35,6 @@ import numpy as np
 import pyarrow as pa
 
 from . import core, mapfile
-from .varint import encode_vint
 
 BLOOM_FILE = "bloom"
 HASH_COUNT = 5  # BloomMapFile.HASH_COUNT
@@ -103,18 +102,19 @@ def _key_positions(key_bytes: bytes, nb_hash: int, vector_size: int) -> list[int
     return out
 
 
+def serialize_keys(keys: pa.Array, key_class: str) -> list[bytes]:
+    """The Writable wire bytes of each key (byteArrayForBloomKey): the
+    column encoder's output, sliced per record."""
+    lengths, data = core._encode_column_np(key_class, keys)
+    ends = np.cumsum(lengths).tolist()
+    return [data[e - n : e] for e, n in zip(ends, lengths.tolist())]
+
+
 def serialize_key(value, key_class: str) -> bytes:
-    """The Writable wire bytes of one key (byteArrayForBloomKey)."""
-    if key_class == "org.apache.hadoop.io.Text":
-        b = value.encode("utf-8") if isinstance(value, str) else bytes(value)
-        return encode_vint(len(b)) + b
-    if key_class == "org.apache.hadoop.io.BytesWritable":
-        b = bytes(value)
-        return struct.pack(">i", len(b)) + b
-    _, np_dtype = core.WRITABLES.get(key_class, (None, None))
-    if np_dtype not in (None, "null"):  # fixed width: big-endian bytes
-        return np.array(value, dtype=np_dtype).tobytes()
-    raise core.SeqFileError(f"no bloom key serializer for {key_class}")
+    """The Writable wire bytes of one key."""
+    if key_class not in core.WRITABLES:
+        raise core.SeqFileError(f"no bloom key serializer for {key_class}")
+    return serialize_keys(pa.array([value], core.WRITABLES[key_class][0]), key_class)[0]
 
 
 class DynamicBloom:
@@ -219,8 +219,8 @@ def write_bloom_map_dir(
     keys = core.read_file(
         os.path.join(path, mapfile.DATA_FILE), want_values=False
     ).column(0)
-    for k in keys.to_pylist():
-        bloom.add(serialize_key(k, header.key_class))
+    for k in serialize_keys(keys.combine_chunks(), header.key_class):
+        bloom.add(k)
     tmp = os.path.join(path, "." + BLOOM_FILE)
     with open(tmp, "wb") as f:
         bloom.write(f)

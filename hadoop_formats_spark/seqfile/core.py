@@ -12,6 +12,16 @@ library jacobstanley/hadoop-formats:
   dtypes
 * variable-width offset slicing: ``Writable.hs:115-134``
 
+The variable-width Writables share one wire layout, each record a
+length prefix then its payload: a Hadoop VInt byte count for Text, a
+4-byte big-endian byte count for BytesWritable.  ``_prefix_mask`` is
+that layout's one codec, for both directions: a boolean mask over a
+column's back-to-back records marks every prefix byte, so decode keeps
+``data[~mask]`` and encode fills ``out[mask]`` with the prefixes
+(``varint.encode_vints`` / a ``>u4`` view) and ``out[~mask]`` with the
+payloads.  Bloom keys (``bloom.serialize_keys``) are encoded by the
+same column encoder.
+
 Differences, deliberate (SURVEY.md §1.3, §2.1):
 
 * metadata count is read **big-endian** (Hadoop-correct; the reference's
@@ -41,6 +51,8 @@ from .varint import (
     decode_vint_array,
     encode_vint,
     encode_vint_array,
+    encode_vints,
+    vint_size,
     vint_sizes,
 )
 
@@ -52,6 +64,7 @@ GZIP_CODEC = "org.apache.hadoop.io.compress.GzipCodec"
 BZIP2_CODEC = "org.apache.hadoop.io.compress.BZip2Codec"
 SYNC_ESCAPE = b"\xff\xff\xff\xff"
 SYNC_INTERVAL = 100 * (4 + 16)  # Hadoop: sync every ~2000 bytes (record/none)
+TEXT = "org.apache.hadoop.io.Text"
 
 # Java class name ↔ decoder metadata (SURVEY §1.2 table; Writable.hs:73-106)
 # entry: (arrow type, numpy big-endian dtype or None for variable width)
@@ -63,7 +76,7 @@ WRITABLES: dict[str, tuple[pa.DataType, str | None]] = {
     "org.apache.hadoop.io.FloatWritable": (pa.float32(), ">f4"),
     "org.apache.hadoop.io.DoubleWritable": (pa.float64(), ">f8"),
     "org.apache.hadoop.io.BytesWritable": (pa.binary(), None),
-    "org.apache.hadoop.io.Text": (pa.string(), None),
+    TEXT: (pa.string(), None),
 }
 
 # Arrow type name → Java class, for writers handed a plain Arrow table
@@ -158,6 +171,32 @@ def _codec_funcs(codec_class: str):
 
 SUPPORTED_CODECS = (SNAPPY_CODEC, DEFAULT_CODEC, GZIP_CODEC, BZIP2_CODEC)
 
+# writer ``codec`` short names
+CODEC_NAMES = {
+    "snappy": SNAPPY_CODEC,
+    "default": DEFAULT_CODEC,
+    "deflate": DEFAULT_CODEC,
+    "gzip": GZIP_CODEC,
+    "bzip2": BZIP2_CODEC,
+}
+
+
+def check_writer_options(block_records: int, compression_type: str, codec: str) -> str:
+    """The one check of the writer options, run where a writer is built
+    (on the driver for the datasource writers, before any task starts).
+    Returns the codec's class name (short names map through
+    ``CODEC_NAMES``)."""
+    if block_records < 1:
+        raise ValueError(f"block_records must be >= 1, got {block_records}")
+    if compression_type not in ("block", "record", "none"):
+        raise ValueError(
+            f"compression_type must be block|record|none, got {compression_type}"
+        )
+    codec = CODEC_NAMES.get(codec.lower(), codec)
+    if codec not in SUPPORTED_CODECS:
+        raise ValueError(f"unsupported codec: {codec}")
+    return codec
+
 
 @dataclass
 class Header:
@@ -200,31 +239,31 @@ class RecordBlock:
     offset: int = 0  # file offset of the block's sync escape
 
 
-def _read_text(buf: bytes, pos: int) -> tuple[str, int]:
-    """Varint-length-prefixed UTF-8 ("textWritable", Parser.hs:119-121)."""
-    try:
-        n, pos = decode_vint(buf, pos)
-        if n < 0 or pos + n > len(buf):
+def _read_header(f: io.BufferedIOBase, file_end: int) -> Header:
+    """Parse a file header (``Parser.hs:43-70``) from ``f``, reading only
+    as far as the header declares.  A declared length past ``file_end``
+    raises ``SeqFileError`` before anything is read for it."""
+
+    def text() -> str:  # VInt-length-prefixed UTF-8 (Parser.hs:119-121)
+        n = _read_vint_stream(f)
+        if n < 0 or n > file_end - f.tell():
             raise SeqFileError("truncated text field in header")
-        return buf[pos : pos + n].decode("utf-8"), pos + n
-    except (IndexError, UnicodeDecodeError) as ex:
-        raise SeqFileError(f"corrupt text field in header: {ex}") from ex
+        try:
+            return f.read(n).decode("utf-8")
+        except UnicodeDecodeError as ex:
+            raise SeqFileError(f"corrupt text field in header: {ex}") from ex
 
-
-def parse_header(buf: bytes) -> Header:
-    """Parse a file header (``Parser.hs:43-70``). ``buf`` must contain at
-    least the full header (a 1 KiB prefix is plenty in practice)."""
-    if buf[:3] != MAGIC:
+    head = f.read(4)
+    if head[:3] != MAGIC:
         raise SeqFileError("not a sequence file (bad magic)")
-    if len(buf) < 4 or buf[3] != VERSION:
-        raise SeqFileError(f"unsupported version: {buf[3] if len(buf) > 3 else '?'}")
-    pos = 4
-    key_class, pos = _read_text(buf, pos)
-    value_class, pos = _read_text(buf, pos)
-    if pos + 2 > len(buf):
+    if len(head) < 4 or head[3] != VERSION:
+        raise SeqFileError(f"unsupported version: {head[3] if len(head) > 3 else '?'}")
+    key_class = text()
+    value_class = text()
+    flags = f.read(2)
+    if len(flags) < 2:
         raise SeqFileError("truncated header")
-    compression, block_compression = buf[pos], buf[pos + 1]
-    pos += 2
+    compression, block_compression = flags
     if block_compression and not compression:
         raise SeqFileError("invalid header: blockCompression without compression")
     # the reference accepts ONLY (1,1)+Snappy (Parser.hs:56-65); we also
@@ -233,29 +272,24 @@ def parse_header(buf: bytes) -> Header:
     # lifted in round 2)
     codec_class = ""
     if compression:
-        codec_class, pos = _read_text(buf, pos)
+        codec_class = text()
         if codec_class not in SUPPORTED_CODECS:
             raise SeqFileError(f"unsupported codec: {codec_class}")  # Parser.hs:62-65
-    if pos + 4 > len(buf):
+    count = f.read(4)
+    if len(count) < 4:
         raise SeqFileError("truncated header")
-    (meta_count,) = struct.unpack(">I", buf[pos : pos + 4])  # BE, Hadoop-correct
-    pos += 4
-    metadata = []
-    for _ in range(meta_count):
-        k, pos = _read_text(buf, pos)
-        v, pos = _read_text(buf, pos)
-        metadata.append((k, v))
-    sync = bytes(buf[pos : pos + 16])
+    (meta_count,) = struct.unpack(">I", count)  # BE, Hadoop-correct
+    metadata = [(text(), text()) for _ in range(meta_count)]
+    sync = f.read(16)
     if len(sync) != 16:
         raise SeqFileError("truncated sync marker")
-    pos += 16
     return Header(
         key_class,
         value_class,
         codec_class,
         metadata,
         sync,
-        pos,
+        f.tell(),
         compression=bool(compression),
         block_compression=bool(block_compression),
     )
@@ -350,41 +384,36 @@ def _decode_column(
             raise SeqFileError(f"corrupt lengths section: {ex}") from ex
     if lengths.sum() != len(data_buf):
         raise SeqFileError("variable-width lengths do not cover data buffer")
-    data = np.frombuffer(data_buf, dtype=np.uint8)
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    if java_class == "org.apache.hadoop.io.BytesWritable":
-        # strip the 4-byte BE length prefix (Writable.hs:97-99)
-        prefix = np.full(count, 4, dtype=np.int64)
-        if (lengths < 4).any():
-            raise SeqFileError("BytesWritable record shorter than 4-byte prefix")
-    else:  # Text: strip leading Hadoop-varint prefix (Writable.hs:101-106)
-        if len(data) == 0:
-            prefix = np.zeros(count, dtype=np.int64)
-        else:
-            first_bytes = data[np.minimum(starts, len(data) - 1)]
-            prefix = np.where(lengths == 0, 0, vint_sizes(first_bytes))
-    # drop prefix bytes via a keep-mask, then rebuild contiguous offsets
-    keep = np.ones(len(data), dtype=bool)
-    # mark prefix byte ranges False (vectorized via range deltas)
-    if count:
-        delta = np.zeros(len(data) + 1, dtype=np.int8)
-        pstart = starts[prefix > 0]
-        pend = (starts + prefix)[prefix > 0]
-        np.add.at(delta, pstart, 1)
-        np.add.at(delta, pend, -1)
-        keep = np.cumsum(delta[:-1]) == 0
-    payload = data[keep]
-    out_lengths = lengths - prefix
-    if (out_lengths < 0).any():
+    if (lengths < 0).any():
         raise SeqFileError("negative payload length")
+    data = np.frombuffer(data_buf, dtype=np.uint8)
+    if java_class == TEXT:  # VInt prefix, sized by its first byte (Writable.hs:101-106)
+        starts = np.cumsum(lengths) - lengths
+        nonempty = lengths > 0
+        plen = np.zeros(count, dtype=np.int64)
+        plen[nonempty] = vint_sizes(data[starts[nonempty]])
+    else:  # BytesWritable: 4-byte BE prefix (Writable.hs:97-99)
+        plen = np.full(count, 4, dtype=np.int64)
+    out_lengths = lengths - plen
+    if (out_lengths < 0).any():
+        raise SeqFileError(f"{java_class} record shorter than its length prefix")
+    payload = data[~_prefix_mask(lengths, plen)]
     offsets = np.zeros(count + 1, dtype=np.int32)
     offsets[1:] = np.cumsum(out_lengths)
-    buf_offsets = pa.py_buffer(offsets.tobytes())
-    buf_data = pa.py_buffer(payload.tobytes())
-    if java_class == "org.apache.hadoop.io.Text":
-        return pa.StringArray.from_buffers(count, buf_offsets, buf_data)
-    return pa.Array.from_buffers(pa.binary(), count, [None, buf_offsets, buf_data])
+    return pa.Array.from_buffers(
+        arrow_type, count, [None, pa.py_buffer(offsets), pa.py_buffer(payload)]
+    )
+
+
+def _prefix_mask(rec_lens: np.ndarray, plen: np.ndarray) -> np.ndarray:
+    """The variable-width Writable layout: over back-to-back records of
+    ``rec_lens`` bytes, each starting with a ``plen``-byte length
+    prefix, True on every prefix byte (``plen <= rec_lens``)."""
+    mask = np.zeros(int(rec_lens.sum()), dtype=bool)
+    rec_starts = np.cumsum(rec_lens) - rec_lens
+    prefix_starts = np.cumsum(plen) - plen
+    mask[np.repeat(rec_starts - prefix_starts, plen) + np.arange(int(plen.sum()))] = True
+    return mask
 
 
 @dataclass
@@ -432,20 +461,13 @@ def _read_raw_block(
 
 
 def _read_vint_stream(f: io.BufferedIOBase) -> int:
-    first = f.read(1)
-    if not first:
-        raise SeqFileError("unexpected EOF reading varint")
-    b = first[0]
-    sb = b - 256 if b >= 0x80 else b
-    if sb >= -112:
-        return sb
-    negative = sb < -120
-    size = (-119 - sb) if negative else (-111 - sb)
-    rest = f.read(size - 1)
-    if len(rest) != size - 1:
-        raise SeqFileError("unexpected EOF reading varint")
-    value = int.from_bytes(rest, "big")
-    return ~value if negative else value
+    buf = f.read(1)
+    if buf:
+        buf += f.read(vint_size(buf[0]) - 1)
+    try:
+        return decode_vint(buf, 0)[0]
+    except IndexError as ex:
+        raise SeqFileError("unexpected EOF reading varint") from ex
 
 
 def _decode_raw(
@@ -472,7 +494,7 @@ def _decode_raw(
 
 def read_header(path: str) -> Header:
     with open(path, "rb") as f:
-        return parse_header(f.read(4096))
+        return _read_header(f, os.fstat(f.fileno()).st_size)
 
 
 def iter_blocks(
@@ -504,9 +526,9 @@ def iter_blocks(
     and the next sync marker.
     """
     with open(path, "rb") as f:
-        if header is None:
-            header = parse_header(f.read(4096))
         file_end = os.fstat(f.fileno()).st_size
+        if header is None:
+            header = _read_header(f, file_end)
         stop = file_end if end is None else min(end, file_end)
         if header.block_compression:
             pos = max(start, header.header_len)
@@ -817,61 +839,13 @@ def _var_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data, lens
 
 
-def _interleave_prefixed(
-    data: np.ndarray, lens: np.ndarray, pfx: np.ndarray, plen: np.ndarray
-) -> bytes:
-    """Build the payload buffer: per record, ``plen`` prefix bytes from
-    the (n, max_plen) ``pfx`` matrix, then its data bytes — fully
-    vectorized (one fancy-index store per prefix byte position plus one
-    for the data)."""
-    n = len(lens)
-    rec_len = plen + lens
-    out_starts = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        out_starts[1:] = np.cumsum(rec_len)[:-1]
-    out = np.zeros(int(rec_len.sum()), dtype=np.uint8)
-    for k in range(pfx.shape[1]):
-        mask = plen > k
-        out[out_starts[mask] + k] = pfx[mask, k]
-    if len(data):
-        in_starts = np.zeros(n, dtype=np.int64)
-        if n > 1:
-            in_starts[1:] = np.cumsum(lens)[:-1]
-        rec_of_byte = np.repeat(np.arange(n), lens)
-        shift = (out_starts + plen - in_starts)[rec_of_byte]
-        out[np.arange(len(data)) + shift] = data
-    return out.tobytes()
-
-
-def _vint_prefix_matrix(lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized Hadoop-varint encodings of non-negative lengths:
-    returns (prefix byte matrix (n, 5), prefix byte counts)."""
-    n = len(lens)
-    nb = (
-        (lens > 127).astype(np.int64)
-        + (lens > 0xFF)
-        + (lens > 0xFFFF)
-        + (lens > 0xFFFFFF)
-    )  # extra big-endian bytes beyond the marker; 0 → direct single byte
-    plen = np.where(nb == 0, 1, 1 + nb)
-    pfx = np.zeros((n, 5), dtype=np.uint8)
-    direct = nb == 0
-    pfx[direct, 0] = lens[direct]
-    marked = ~direct
-    pfx[marked, 0] = (-112 - nb[marked]) & 0xFF
-    for k in range(4):  # big-endian value bytes right after the marker
-        sel = nb > k
-        if not sel.any():
-            break
-        pfx[sel, 1 + k] = (lens[sel] >> (8 * (nb[sel] - 1 - k))) & 0xFF
-    return pfx, plen
-
-
 def _encode_column_np(java_class: str, arr: pa.Array) -> tuple[np.ndarray, bytes]:
     """Encode one column → (per-record serialized lengths, data buffer),
     uncompressed.  Variable-width paths are numpy-vectorized (no
     per-record Python)."""
-    _, np_dtype = WRITABLES[java_class]
+    if java_class not in WRITABLES:
+        raise SeqFileError(f"unsupported Writable class: {java_class}")
+    arrow_type, np_dtype = WRITABLES[java_class]
     n = len(arr)
     if arr.null_count and np_dtype != "null":
         raise SeqFileError(f"{java_class} cannot encode nulls")
@@ -881,17 +855,17 @@ def _encode_column_np(java_class: str, arr: pa.Array) -> tuple[np.ndarray, bytes
         width = int(np_dtype[2:])
         data = arr.to_numpy(zero_copy_only=False).astype(np_dtype).tobytes()
         return np.full(n, width, dtype=np.int64), data
-    if java_class == "org.apache.hadoop.io.Text":
-        data, lens = _var_buffers(arr.cast(pa.string()))
-        pfx, plen = _vint_prefix_matrix(lens)
-    else:  # BytesWritable: fixed 4-byte BE length prefix
-        data, lens = _var_buffers(arr.cast(pa.binary()))
-        plen = np.full(n, 4, dtype=np.int64)
-        pfx = np.zeros((n, 4), dtype=np.uint8)
-        for k in range(4):
-            pfx[:, k] = (lens >> (8 * (3 - k))) & 0xFF
-    payload = _interleave_prefixed(data, lens, pfx, plen)
-    return plen + lens, payload
+    data, lens = _var_buffers(arr.cast(arrow_type))
+    if java_class == TEXT:
+        prefixes, plen = encode_vints(lens)
+    else:
+        prefixes, plen = lens.astype(">u4").view(np.uint8), np.full(n, 4, dtype=np.int64)
+    rec_lens = plen + lens
+    mask = _prefix_mask(rec_lens, plen)
+    out = np.empty(len(mask), dtype=np.uint8)
+    out[mask] = prefixes
+    out[~mask] = data
+    return rec_lens, out.tobytes()
 
 
 def _encode_column(java_class: str, arr: pa.Array) -> tuple[bytes, bytes]:
@@ -917,10 +891,9 @@ class SeqFileWriter:
     codec: str = SNAPPY_CODEC
 
     def __post_init__(self):
-        if self.compression_type not in ("block", "record", "none"):
-            raise SeqFileError(
-                f"compression_type must be block|record|none, got {self.compression_type}"
-            )
+        self.codec = check_writer_options(
+            self.block_records, self.compression_type, self.codec
+        )
         if self.compression_type != "none":
             self._compress, _ = _codec_funcs(self.codec)
         if self.sync is None:

@@ -71,15 +71,6 @@ from . import core
 
 DEFAULT_SPLIT_SIZE = 128 * 1024 * 1024
 
-# writer ``codec`` short names
-_CODEC_NAMES = {
-    "snappy": core.SNAPPY_CODEC,
-    "default": core.DEFAULT_CODEC,
-    "deflate": core.DEFAULT_CODEC,
-    "gzip": core.GZIP_CODEC,
-    "bzip2": core.BZIP2_CODEC,
-}
-
 
 def _expand_paths(path: str) -> list[str]:
     """path may be a file, a directory, or a glob."""
@@ -427,10 +418,10 @@ class SeqCommit(WriterCommitMessage):
 
 
 class KeyValueWriter(DataSourceArrowWriter):
-    """Options every (key, value) writer shares, parsed once: ``path``,
-    the schema's two Writable classes, ``block_records`` (default per
-    format), ``compression_type`` and ``codec`` (class name or short
-    name)."""
+    """Options every (key, value) writer shares, parsed and checked once,
+    on the driver: ``path``, the schema's two Writable classes,
+    ``block_records`` (default per format), ``compression_type`` and
+    ``codec`` (class name or short name)."""
 
     format_name = "hadoop_seq"
     default_block_records = 65536
@@ -454,8 +445,11 @@ class KeyValueWriter(DataSourceArrowWriter):
             self.classes.append(cls)
         self.block_records = int(options.get("block_records", self.default_block_records))
         self.compression_type = options.get("compression_type", "block").lower()
-        codec = options.get("codec", core.SNAPPY_CODEC)
-        self.codec = _CODEC_NAMES.get(codec.lower(), codec)
+        self.codec = core.check_writer_options(
+            self.block_records,
+            self.compression_type,
+            options.get("codec", core.SNAPPY_CODEC),
+        )
 
 
 class SeqFileWriter(KeyValueWriter):

@@ -1,18 +1,23 @@
 """Decoder fuzz: damaged SequenceFiles fail only with ``SeqFileError``.
 
-Inputs are our writer's output (block / record / none layouts, Snappy
-and Default codecs) and the Hadoop-written files in ``tests/data/jvm/``.
-Every truncation offset through a file's first block, plus random bit
-flips, must make ``iter_blocks`` and ``iter_block_counts`` either return
-or raise ``SeqFileError`` — the one error PERMISSIVE mode catches.  On a
+Inputs are our writer's output (block / record / none layouts, the
+Snappy, Default, Gzip and BZip2 codecs, with short values and with
+Text values of 100-295 bytes whose lengths take multi-byte VInts) and
+the Hadoop-written files in ``tests/data/jvm/``.  Every truncation
+offset through a file's first block, plus random bit flips, must make
+``iter_blocks`` and ``iter_block_counts`` either return or raise
+``SeqFileError`` — the one error PERMISSIVE mode catches.  On a
 truncation, the in-process PERMISSIVE reader returns a prefix of the
-clean records."""
+clean records.  Each example runs under a ``SIGALRM`` guard, so a
+decoder that loops fails the test instead of hanging it."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
+import signal
 
 import pyarrow as pa
 import pytest
@@ -24,25 +29,58 @@ from hadoop_formats_spark.seqfile import core
 from hadoop_formats_spark.seqfile.datasource import SeqFileDataSource
 
 _LAYOUTS = [
-    (layout, codec)
+    (layout, codec, long_values)
     for layout in ("block", "record", "none")
-    for codec in (core.SNAPPY_CODEC, core.DEFAULT_CODEC)
-    if not (layout == "none" and codec == core.DEFAULT_CODEC)
+    for codec in (core.SNAPPY_CODEC, core.DEFAULT_CODEC, core.GZIP_CODEC, core.BZIP2_CODEC)
+    for long_values in (False, True)
+    if not (layout == "none" and codec != core.SNAPPY_CODEC)
+    # long values through the two codec framings: Snappy's block stream
+    # and one continuous zlib stream
+    and not (long_values and codec in (core.GZIP_CODEC, core.BZIP2_CODEC))
 ]
 
 
 N_RECORDS = 40
+EXAMPLE_SECONDS = 10
 
 
-def _writer_output(path: str, layout: str, codec: str) -> str:
+class _Hang(BaseException):
+    """Raised by the guard; a BaseException, so no ``except Exception``
+    in the decoder can turn it into a ``SeqFileError``."""
+
+
+@contextlib.contextmanager
+def _hang_guard(seconds: float = EXAMPLE_SECONDS):
+    def expire(signum, frame):
+        raise _Hang(f"decoder still running after {seconds} s")
+
+    previous = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, previous)
+
+
+def test_hang_guard_stops_a_loop():
+    with pytest.raises(_Hang):
+        with _hang_guard(0.05):
+            while True:
+                pass
+
+
+def _writer_output(path: str, layout: str, codec: str, long_values: bool = False) -> str:
     """40 records in blocks of 10; the ~70-byte records put the record
-    layouts' first sync marker after about 27 records."""
+    layouts' first sync marker after about 27 records.  Long values are
+    100 + 5 i bytes, crossing the 127/128 and 255/256 VInt steps."""
+    values = [hashlib.sha256(b"%d" % i).hexdigest() for i in range(N_RECORDS)]
+    if long_values:
+        values = [(v * 5)[: 100 + 5 * i] for i, v in enumerate(values)]
     table = pa.table(
         {
             "key": pa.array([f"k{i:04d}" for i in range(N_RECORDS)]),
-            "value": pa.array(
-                [hashlib.sha256(b"%d" % i).hexdigest() for i in range(N_RECORDS)]
-            ),
+            "value": pa.array(values),
         }
     )
     core.write_table(path, table, block_records=10, compression_type=layout, codec=codec)
@@ -85,9 +123,16 @@ def _permissive_rows(path: str, schema) -> list[tuple]:
     return rows
 
 
-@pytest.mark.parametrize("layout,codec", _LAYOUTS, ids=lambda v: str(v).rsplit(".", 1)[-1])
-def test_every_truncation_through_first_block(tmp_path, layout, codec):
-    clean_path = _writer_output(str(tmp_path / "clean.seq"), layout, codec)
+@pytest.mark.parametrize(
+    "layout,codec,long_values",
+    _LAYOUTS,
+    ids=[
+        f"{layout}-{codec.rsplit('.', 1)[-1]}" + ("-long" if long_values else "")
+        for layout, codec, long_values in _LAYOUTS
+    ],
+)
+def test_every_truncation_through_first_block(tmp_path, layout, codec, long_values):
+    clean_path = _writer_output(str(tmp_path / "clean.seq"), layout, codec, long_values)
     data = open(clean_path, "rb").read()
     clean_src = SeqFileDataSource({"path": clean_path})
     schema = clean_src.schema()
@@ -97,9 +142,10 @@ def test_every_truncation_through_first_block(tmp_path, layout, codec):
     for n in range(_first_block_end(clean_path, data) + 1):
         with open(cut, "wb") as f:
             f.write(data[:n])
-        _walk_counts(cut)
-        # PERMISSIVE catches SeqFileError only: any other error escapes
-        rows = _permissive_rows(cut, schema)
+        with _hang_guard():
+            _walk_counts(cut)
+            # PERMISSIVE catches SeqFileError only: any other error escapes
+            rows = _permissive_rows(cut, schema)
         assert rows == clean[: len(rows)], f"truncated at {n}"
 
 
@@ -109,8 +155,8 @@ def fuzz_inputs(tmp_path_factory) -> tuple[str, list[bytes]]:
     root = str(tmp_path_factory.mktemp("fuzz"))
     files = sorted(glob.glob(os.path.join(REFERENCE_FIXTURES, "*.seq")))
     files += [
-        _writer_output(os.path.join(root, f"{layout}-{i}.seq"), layout, codec)
-        for i, (layout, codec) in enumerate(_LAYOUTS)
+        _writer_output(os.path.join(root, f"{layout}-{i}.seq"), layout, codec, long_values)
+        for i, (layout, codec, long_values) in enumerate(_LAYOUTS)
     ]
     return os.path.join(root, "flipped.seq"), [open(p, "rb").read() for p in files]
 
@@ -130,4 +176,5 @@ def test_bit_flips_raise_only_seqfile_error(fuzz_inputs, which, head_bias, draw)
         data[where] ^= 1 << bit
     with open(path, "wb") as f:
         f.write(bytes(data))
-    _walk(path)
+    with _hang_guard():
+        _walk(path)

@@ -413,3 +413,16 @@ def test_sorter_merge_runs_are_sorted_and_disjoint(spark, sf_dir):
     import pyarrow.parquet as pq
 
     assert total == pq.read_metadata(f"{sf_dir}/orders.parquet").num_rows
+
+
+def test_last_key_over_4k_reads_back(tmp_path):
+    """The last key is stored in the data header's metadata, so a long
+    last Text key makes the header longer than 4 KiB."""
+    d = str(tmp_path / "m")
+    last = "z" * 5000
+    t = pa.table({"key": ["a", "b", last], "value": [1, 2, 3]})
+    M.write_map_dir(d, t, block_records=2)
+    assert M.read_index(d).last_key == last
+    assert M.read_map_dir(d).to_pydict() == t.to_pydict()
+    assert M.map_get(d, last) == 3
+    assert M.read_map_dir(d, key_lower=last).column("value").to_pylist() == [3]

@@ -140,3 +140,114 @@ def test_layout_matrix_long_bytes(tmp_path_factory, vals, combo):
     _roundtrip_layout(
         tmp, pa.array(keys, pa.int64()), pa.array(vals, pa.binary()), *combo
     )
+
+
+# -- the variable-width prefix layout at its boundaries: record byte
+#    lengths straddle the VInt size steps (0, 127/128, 255/256,
+#    65535/65536), in ASCII and in multi-byte UTF-8 --
+
+import struct
+
+from hadoop_formats_spark.seqfile import bloom
+from hadoop_formats_spark.seqfile.varint import encode_vint
+
+TEXT = "org.apache.hadoop.io.Text"
+BYTES = "org.apache.hadoop.io.BytesWritable"
+_EDGES = [0, 1, 127, 128, 255, 256, 65535, 65536]
+byte_lengths = st.one_of(
+    st.sampled_from(_EDGES).flatmap(
+        lambda e: st.integers(max(0, e - 2), e + 2)
+    ),
+    st.integers(0, 300),
+)
+
+
+@st.composite
+def boundary_texts(draw):
+    """A string of an exact UTF-8 byte length, built from one character
+    of 1-4 bytes plus ASCII filler."""
+    length = draw(byte_lengths)
+    ch = draw(st.sampled_from(["a", "é", "€", "𝄞"]))
+    width = len(ch.encode("utf-8"))
+    return ch * (length // width) + "z" * (length % width)
+
+
+boundary_bytes = byte_lengths.flatmap(
+    lambda n: st.sampled_from([b"\x00", b"\xff", b"\x80"]).map(lambda b: b * n)
+)
+
+
+_FIXED = {
+    "org.apache.hadoop.io.ShortWritable": ">h",
+    "org.apache.hadoop.io.IntWritable": ">i",
+    "org.apache.hadoop.io.LongWritable": ">q",
+    "org.apache.hadoop.io.FloatWritable": ">f",
+    "org.apache.hadoop.io.DoubleWritable": ">d",
+}
+
+
+def _reference(java_class, values) -> list[bytes]:
+    """The per-record Writable serialization, one record at a time."""
+    out = []
+    for v in values:
+        if java_class == TEXT:
+            b = v.encode("utf-8")
+            out.append(encode_vint(len(b)) + b)
+        elif java_class == BYTES:
+            out.append(struct.pack(">i", len(v)) + v)
+        else:
+            out.append(struct.pack(_FIXED[java_class], v))
+    return out
+
+
+@settings(**SETTINGS)
+@given(
+    texts=st.lists(boundary_texts(), min_size=1, max_size=12),
+    blobs=st.lists(boundary_bytes, min_size=1, max_size=12),
+    layout=st.sampled_from(["block", "record", "none"]),
+)
+def test_prefix_layout_boundaries(tmp_path_factory, texts, blobs, layout):
+    n = min(len(texts), len(blobs))
+    texts, blobs = texts[:n], blobs[:n]
+    for java_class, values, arr in (
+        (TEXT, texts, pa.array(texts, pa.string())),
+        (BYTES, blobs, pa.array(blobs, pa.binary())),
+    ):
+        ref = _reference(java_class, values)
+        lengths, data = _core._encode_column_np(java_class, arr)
+        assert data == b"".join(ref)
+        assert lengths.tolist() == [len(r) for r in ref]
+        section, data = _core._encode_column(java_class, arr)
+        assert section == b"".join(encode_vint(len(r)) for r in ref)
+        decoded = _core._decode_column(java_class, section, data, n)
+        assert decoded.to_pylist() == values
+    tmp = tmp_path_factory.mktemp("pp")
+    _roundtrip_layout(
+        tmp, pa.array(texts, pa.string()), pa.array(blobs, pa.binary()), layout, _core.SNAPPY_CODEC
+    )
+
+
+@settings(**SETTINGS)
+@given(
+    texts=st.lists(boundary_texts(), min_size=1, max_size=8),
+    blobs=st.lists(boundary_bytes, min_size=1, max_size=8),
+    longs=long_values,
+    doubles=double_values,
+)
+def test_bloom_keys_match_reference(texts, blobs, longs, doubles):
+    shorts = [v % 65536 - 32768 for v in longs]
+    ints = [v % 2**32 - 2**31 for v in longs]
+    floats = [struct.unpack(">f", struct.pack(">f", v))[0] for v in doubles if abs(v) < 3e38]
+    for java_class, values in (
+        (TEXT, texts),
+        (BYTES, blobs),
+        ("org.apache.hadoop.io.ShortWritable", shorts),
+        ("org.apache.hadoop.io.IntWritable", ints),
+        ("org.apache.hadoop.io.LongWritable", longs),
+        ("org.apache.hadoop.io.FloatWritable", floats),
+        ("org.apache.hadoop.io.DoubleWritable", doubles),
+    ):
+        ref = _reference(java_class, values)
+        assert [bloom.serialize_key(v, java_class) for v in values] == ref
+        arr = pa.array(values, _core.WRITABLES[java_class][0])
+        assert bloom.serialize_keys(arr, java_class) == ref

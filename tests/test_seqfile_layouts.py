@@ -274,3 +274,102 @@ def test_tiny_splits_exactly_once(tmp_path, ctype, codec, split_size):
     for s in range(0, size, split_size):
         n += sum(core.iter_block_counts(p, start=s, end=min(s + split_size, size)))
     assert n == t.num_rows
+
+
+@pytest.mark.parametrize(
+    "block_records,ctype,codec",
+    [(0, "block", "snappy"), (-1, "none", "snappy"), (10, "bogus", "snappy"), (10, "block", "nosuch")],
+)
+def test_writer_options_checked_before_writing(tmp_path, block_records, ctype, codec):
+    """A bad option raises ``ValueError`` before the file is opened;
+    ``block_records=0`` used to make ``write_batch`` loop forever."""
+    p = tmp_path / "f.seq"
+    with pytest.raises(ValueError):
+        core.write_table(
+            str(p),
+            pa.table({"key": ["a", "b", "c"], "value": [1, 2, 3]}),
+            block_records=block_records,
+            compression_type=ctype,
+            codec=codec,
+        )
+    assert not p.exists()
+
+
+def test_writer_codec_short_names(tmp_path):
+    p = str(tmp_path / "f.seq")
+    core.write_table(p, pa.table({"key": ["a"], "value": [1]}), codec="GZIP")
+    assert core.read_header(p).codec_class == core.GZIP_CODEC
+    assert core.read_file(p).column("key").to_pylist() == ["a"]
+
+
+@pytest.mark.parametrize("fmt", ["hadoop_seq", "hadoop_map"])
+@pytest.mark.parametrize(
+    "option,value",
+    [("block_records", "0"), ("compression_type", "bogus"), ("codec", "nosuch")],
+)
+def test_bad_writer_option_fails_at_save(spark, tmp_path, fmt, option, value):
+    """Checked once on the driver: ``.save()`` fails with the
+    ``ValueError`` and no write task runs, so no part file appears."""
+    out = tmp_path / "out"
+    df = spark.range(3).selectExpr("id AS key", "id AS value")
+    with pytest.raises(Exception, match=f"ValueError: .*{value}"):
+        df.write.format(fmt).option(option, value).mode("append").save(str(out))
+    assert not out.exists() or not os.listdir(out)
+
+
+def test_header_over_4k_round_trips(spark, tmp_path):
+    """A ``metadata.<key>`` value makes the header longer than 4 KiB;
+    the header is read as far as it declares."""
+    from hadoop_formats_spark.seqfile.datasource import read_metadata
+
+    big = "m" * 5000
+    out = str(tmp_path / "out")
+    spark.range(50).coalesce(1).selectExpr("id AS key", "CAST(id AS STRING) AS value").write.format(
+        "hadoop_seq"
+    ).option("metadata.big", big).mode("append").save(out)
+    (part,) = [os.path.join(out, f) for f in os.listdir(out) if f.endswith(".seq")]
+    header = core.read_header(part)
+    assert header.header_len > 5000
+    assert dict(header.metadata) == {"big": big} == read_metadata(part)
+    assert sum(b.count for b in core.iter_blocks(part)) == 50
+    assert spark.read.format("hadoop_seq").load(out).count() == 50
+
+
+def test_header_length_past_eof_raises_before_allocating(tmp_path):
+    import tracemalloc
+
+    from hadoop_formats_spark.seqfile.varint import encode_vint
+
+    p = tmp_path / "huge.seq"
+    p.write_bytes(core.MAGIC + bytes([core.VERSION]) + encode_vint(1 << 40) + b"x" * 64)
+    tracemalloc.start()
+    try:
+        with pytest.raises(core.SeqFileError, match="truncated"):
+            core.read_header(str(p))
+        with pytest.raises(core.SeqFileError, match="truncated"):
+            next(core.iter_blocks(str(p)))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+
+
+@pytest.mark.parametrize("ctype", ["block", "record", "none"])
+def test_jvm_reads_our_long_text(spark, tmp_path, ctype):
+    """Text of 128 B and more takes a multi-byte VInt length prefix;
+    Hadoop's reader must return every value exactly."""
+    lengths = [0, 127, 128, 200, 255, 256, 1000, 65535, 65536, 70000]
+    values = [("é" * n)[: n // 2] + "x" * (n % 2) for n in lengths]  # n UTF-8 bytes
+    values += ["a" * n for n in lengths]
+    keys = [f"k{i:02d}" + "€" * (42 + i) for i in range(len(values))]
+    assert all(len(k.encode()) >= 128 for k in keys)
+    d = tmp_path / "out"
+    d.mkdir()
+    core.write_table(
+        str(d / "f.seq"),
+        pa.table({"key": keys, "value": values}),
+        block_records=7,
+        compression_type=ctype,
+    )
+    got = spark.sparkContext.sequenceFile(str(d)).collect()
+    assert got == list(zip(keys, values))

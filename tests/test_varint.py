@@ -31,6 +31,11 @@ def test_roundtrip(v):
     assert pos == len(buf)
 
 
+@given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=50))
+def test_array_encoding_matches_per_value(vals):
+    assert encode_vint_array(vals) == b"".join(encode_vint(v) for v in vals)
+
+
 @given(st.lists(st.integers(min_value=0, max_value=10_000), max_size=200))
 def test_array_roundtrip(vals):
     arr = np.array(vals, dtype=np.int64)
