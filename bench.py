@@ -52,40 +52,26 @@ def _scaled_seq_file(n: int = 10_000_000) -> str:
     ``n`` records shaped like the reference's text-int.seq
     (``MakeSequenceFiles.java:15-27`` keys F%07X → int), written by our
     vectorized writer in BLOCK+Snappy, read back via auto-split."""
-    import pyarrow as pa
+    from hadoop_formats_spark.cachedir import materialize
 
-    from hadoop_formats_spark.cachedir import cache_path
+    def build(tmp):
+        import numpy as np
+        import pyarrow as pa
 
-    # v2: rebuilt after the snappy-chunk interop fix (chunks now ≤
-    # Hadoop MAX_INPUT_SIZE so the JVM can read the file too — needed
-    # for the JVM-vs-Python ingest comparison below)
-    # v3: rebuilt after the r16 block-records cap fix — the v2 file
-    # carried 1 M-record blocks (write_batch used to flush ALL pending
-    # rows once the threshold was crossed), which starves byte-range
-    # splits of sync markers; v3 has spec-sized 65536-record blocks
-    path = cache_path("seq_cache", "scaled", "text_int_10m_v3.seq")
-    if os.path.isfile(path):
-        return path
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    for old in ("text_int_10m.seq", "text_int_10m_v2.seq"):
-        stale = os.path.join(os.path.dirname(path), old)
-        if os.path.isfile(stale):
-            os.unlink(stale)
-    import numpy as np
+        from hadoop_formats_spark.seqfile import core
 
-    from hadoop_formats_spark.seqfile import core
+        with core.SeqFileWriter(
+            tmp, "org.apache.hadoop.io.Text", "org.apache.hadoop.io.IntWritable"
+        ) as w:
+            chunk = 1_000_000
+            for lo in range(0, n, chunk):
+                ints = np.arange(lo, min(lo + chunk, n), dtype=np.int32)
+                keys = pa.array([f"F{i:07X}" for i in ints.tolist()], pa.string())
+                w.write_batch(keys, pa.array(ints, pa.int32()))
 
-    tmp = path + ".build"
-    with core.SeqFileWriter(
-        tmp, "org.apache.hadoop.io.Text", "org.apache.hadoop.io.IntWritable"
-    ) as w:
-        chunk = 1_000_000
-        for lo in range(0, n, chunk):
-            ints = np.arange(lo, min(lo + chunk, n), dtype=np.int32)
-            keys = pa.array([f"F{i:07X}" for i in ints.tolist()], pa.string())
-            w.write_batch(keys, pa.array(ints, pa.int32()))
-    os.replace(tmp, path)
-    return path
+    # v3: spec-sized 65536-record blocks (byte-range splits need the
+    # sync markers) and Hadoop-sized snappy chunks (the JVM reads it too)
+    return materialize(("seq_cache", "scaled", "text_int_10m_v3.seq"), build)
 
 
 def _steal_counters() -> tuple[int, int]:
@@ -578,11 +564,10 @@ def main() -> None:
     # in the headline total, which stays comparable to r1/r2.
     import shutil as _sh
 
-    from hadoop_formats_spark.queries.seqfile_q import _CACHE_ROOT
+    from hadoop_formats_spark.cachedir import cache_path, sf_key
 
-    _skey = sf_dir.strip("/").replace("/", "_")
     for d in ("orders_sorter_merge", "orders_unsorted_shards"):
-        _sh.rmtree(os.path.join(_CACHE_ROOT, _skey, d), ignore_errors=True)
+        _sh.rmtree(cache_path("seq_cache", sf_key(sf_dir), d), ignore_errors=True)
     _sorter = QUERIES["seqfile_sorter_merge_runs"]
     sorter_build_s, bad_build = timed_best(
         lambda: _sorter.builder(spark, sf_dir).count(), n=1, max_extra=0

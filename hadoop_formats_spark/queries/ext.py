@@ -3848,10 +3848,6 @@ def sample_negatives_contrastive(spark, sf_dir):
     )
 
 
-from hadoop_formats_spark.cachedir import cache_path
-
-_IVF_INDEX_CACHE = cache_path("ivf_index")
-
 from .registry import QUERIES as _QUERIES  # noqa: E402  (self-registry lookup)
 
 
@@ -3872,35 +3868,27 @@ from .registry import QUERIES as _QUERIES  # noqa: E402  (self-registry lookup)
 def ann_ivf_index_persisted(spark, sf_dir):
     import os
     import shutil
-    import uuid
+
+    from hadoop_formats_spark.cachedir import cache_path, materialize, sf_key
 
     from ..operators import similarity as S2
 
-    src = f"{sf_dir}/embeddings.parquet"
-    st = os.stat(src)
+    st = os.stat(f"{sf_dir}/embeddings.parquet")
     # source fingerprint in the key: a regenerated corpus at the same
     # path can never be served a stale index
-    key = (
-        sf_dir.strip("/").replace("/", "_")
-        + f".{st.st_size}.{int(st.st_mtime)}"
-    )
-    final = os.path.join(_IVF_INDEX_CACHE, key)
-    if not os.path.isdir(os.path.join(final, "assigned")):
+    prefix = sf_key(sf_dir) + "."
+    key = prefix + f"{st.st_size}.{int(st.st_mtime)}"
+
+    def build(tmp):
         e = table(spark, sf_dir, "embeddings")
         centroids = e.filter(F.col("vec_id") % 50 == 0).select(
             F.col("vec_id").alias("centroid_id"), "embedding"
         )
         assigned = S2.ivf_assign(e, centroids, method="fold")
-        tmp = final + "." + uuid.uuid4().hex[:8]
         assigned.write.partitionBy("centroid_id").parquet(
             os.path.join(tmp, "assigned")
         )
         centroids.write.parquet(os.path.join(tmp, "centroids"))
-        from .registry import publish_dir
-
-        publish_dir(
-            tmp, final, lambda d: os.path.isdir(os.path.join(d, "assigned"))
-        )
         # prune stale fingerprints of the SAME corpus path so repeated
         # regenerations don't grow the cache unboundedly (ADVICE r4).
         # Only EXACT final names (<prefix><size>.<mtime> — two numeric
@@ -3908,13 +3896,14 @@ def ann_ivf_index_persisted(spark, sf_dir):
         # is <somekey>.<hex8> (a third, non-numeric field), so another
         # process regenerating under a DIFFERENT fingerprint can never
         # have its tmp dir rmtree'd mid-build (ADVICE r5 #3).
-        prefix = sf_dir.strip("/").replace("/", "_") + "."
-        for d in os.listdir(_IVF_INDEX_CACHE):
+        for d in os.listdir(cache_path("ivf_index")):
             if not d.startswith(prefix) or d == key:
                 continue
             tail = d[len(prefix):].split(".")
             if len(tail) == 2 and all(p.isdigit() for p in tail):
-                shutil.rmtree(os.path.join(_IVF_INDEX_CACHE, d), ignore_errors=True)
+                shutil.rmtree(cache_path("ivf_index", d), ignore_errors=True)
+
+    final = materialize(("ivf_index", key), build)
     assigned = spark.read.parquet(os.path.join(final, "assigned"))
     centroids = spark.read.parquet(os.path.join(final, "centroids"))
     e = table(spark, sf_dir, "embeddings")

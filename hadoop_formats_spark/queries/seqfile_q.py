@@ -11,38 +11,32 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import functions as F
 
 from hadoop_formats_spark import REFERENCE_FIXTURES
-from hadoop_formats_spark.cachedir import cache_path
+from hadoop_formats_spark.cachedir import materialize, sf_key
 
-from .registry import _has_file, publish_dir, register, table
+from .registry import register, table
 
 REFERENCE_TEXT_INT = os.path.join(REFERENCE_FIXTURES, "text-int.seq")
 
-_CACHE_ROOT = cache_path("seq_cache")
 
-
-def _roundtrip_dir(spark, sf_dir: str, name: str, build, writer_options=None) -> str:
-    """Idempotently materialize a DataFrame as a SequenceFile dir under
-    /tmp (atomic rename so concurrent runs can't see partial output).
+def _roundtrip_dir(
+    spark, sf_dir: str, name: str, build, writer_options=None, fmt="hadoop_seq"
+) -> str:
+    """Cache the DataFrame ``build()`` written through the ``fmt``
+    DataSource (``hadoop_seq`` or ``hadoop_map``).
     ``writer_options``: dict of DataSource writer options, or a
     zero-arg callable returning one — called only on an actual build,
     so options derived from Spark jobs (e.g. a count) cost nothing on
     cache hits."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, name)
-    if os.path.isdir(final) and any(f.endswith(".seq") for f in os.listdir(final)):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    opts = writer_options() if callable(writer_options) else (writer_options or {})
-    w = build().write.format("hadoop_seq").mode("append")
-    for k, v in opts.items():
-        w = w.option(k, v)
-    w.save(tmp)
-    return publish_dir(tmp, final, _has_file(suffix=".seq"))
+
+    def write(tmp):
+        opts = writer_options() if callable(writer_options) else (writer_options or {})
+        build().write.format(fmt).options(**opts).mode("append").save(tmp)
+
+    return materialize(("seq_cache", sf_key(sf_dir), name), write)
 
 
 @register(
@@ -151,31 +145,17 @@ def seqfile_roundtrip_double_sum(spark, sf_dir):
     "JVM-interop-tested).  orders → record-layout seqfile → aggregate.",
 )
 def seqfile_record_layout_roundtrip(spark, sf_dir):
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "orders_prio_record")
-    if not (
-        os.path.isdir(final)
-        and any(f.endswith(".seq") for f in os.listdir(final))
-    ):
-        tmp = final + "." + uuid.uuid4().hex[:8]
-        (
-            table(spark, sf_dir, "orders")
-            .select(
-                F.col("o_orderkey").alias("key"),
-                F.col("o_orderpriority").alias("value"),
-            )
-            .write.format("hadoop_seq")
-            .option("compression_type", "record")
-            .option("codec", "default")
-            .mode("append")
-            .save(tmp)
-        )
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    df = spark.read.format("hadoop_seq").load(final)
+    path = _roundtrip_dir(
+        spark,
+        sf_dir,
+        "orders_prio_record",
+        lambda: table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("key"),
+            F.col("o_orderpriority").alias("value"),
+        ),
+        {"compression_type": "record", "codec": "default"},
+    )
+    df = spark.read.format("hadoop_seq").load(path)
     return (
         df.groupBy("value")
         .agg(F.count("*").alias("n"), F.sum("key").alias("key_sum"))
@@ -231,24 +211,17 @@ def seqfile_stream_source_counts(spark, sf_dir):
 def seqfile_stream_sink_roundtrip(spark, sf_dir):
     from .registry import events_path
 
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "events_stream_sink")
-    if not (
-        os.path.isdir(final)
-        and any(f.endswith(".seq") for f in os.listdir(final))
-    ):
-        tmp = final + "." + uuid.uuid4().hex[:8]
-        ckpt = tmp + ".ckpt"
+    def write(tmp):
+        src = events_path(sf_dir)
         stream = (
-            spark.readStream.schema(
-                spark.read.parquet(events_path(sf_dir)).schema
-            )
-            .parquet(events_path(sf_dir))
+            spark.readStream.schema(spark.read.parquet(src).schema)
+            .parquet(src)
             .select(
                 F.col("event_id").alias("key"),
                 F.col("event_type").alias("value"),
             )
         )
+        ckpt = tmp + ".ckpt"
         q = (
             stream.writeStream.format("hadoop_seq")
             .option("path", tmp)
@@ -256,14 +229,15 @@ def seqfile_stream_sink_roundtrip(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        shutil.rmtree(ckpt, ignore_errors=True)
-        os.makedirs(os.path.dirname(final), exist_ok=True)
         try:
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-    df = spark.read.format("hadoop_seq").load(final)
+            q.awaitTermination()
+        finally:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+    path = materialize(
+        ("seq_cache", sf_key(sf_dir), "events_stream_sink"), write
+    )
+    df = spark.read.format("hadoop_seq").load(path)
     return (
         df.groupBy("value")
         .agg(F.count("*").alias("n"), F.sum("key").alias("key_sum"))
@@ -283,31 +257,16 @@ def seqfile_stream_sink_roundtrip(spark, sf_dir):
     "the original table.",
 )
 def parquet_write_roundtrip(spark, sf_dir):
-    import os
-    import shutil
-    import uuid as _uuid
-
-    key = sf_dir.strip("/").replace("/", "_")
-    final = cache_path("parquet_cache", key, "lineitem_disc")
-    if not (
-        os.path.isdir(final)
-        and any(f.endswith(".parquet") for f in os.listdir(final))
-    ):
-        tmp = final + "." + _uuid.uuid4().hex[:8]
-        (
-            table(spark, sf_dir, "lineitem")
-            .filter(F.col("l_discount") > 0.05)
-            .select("l_returnflag", "l_quantity")
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = materialize(
+        ("parquet_cache", sf_key(sf_dir), "lineitem_disc"),
+        lambda tmp: table(spark, sf_dir, "lineitem")
+        .filter(F.col("l_discount") > 0.05)
+        .select("l_returnflag", "l_quantity")
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
     return (
-        spark.read.parquet(final)
+        spark.read.parquet(path)
         .groupBy("l_returnflag")
         .agg(F.count("*").alias("n"), F.sum("l_quantity").alias("qty"))
         .orderBy("l_returnflag")
@@ -328,28 +287,16 @@ def parquet_write_roundtrip(spark, sf_dir):
     "(PartitionFilters, the at-scale layout lever).",
 )
 def parquet_partitioned_pruned_read(spark, sf_dir):
-    import os
-    import shutil
-    import uuid as _uuid
-
-    key = sf_dir.strip("/").replace("/", "_")
-    final = cache_path("parquet_cache", key, "lineitem_by_flag")
-    if not os.path.isdir(final) or not os.listdir(final):
-        tmp = final + "." + _uuid.uuid4().hex[:8]
-        (
-            table(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_linestatus", "l_extendedprice")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag")
-            .parquet(tmp)
-        )
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+    path = materialize(
+        ("parquet_cache", sf_key(sf_dir), "lineitem_by_flag"),
+        lambda tmp: table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_linestatus", "l_extendedprice")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(tmp),
+    )
     return (
-        spark.read.parquet(final)
+        spark.read.parquet(path)
         .filter(F.col("l_returnflag") == "R")
         .groupBy("l_linestatus")
         .agg(
@@ -386,9 +333,7 @@ def seqfile_permissive_corrupt_tail(spark, sf_dir):
 
     from ..seqfile import core
 
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "lineitem_corrupt.seq")
-    if not os.path.isfile(final):
+    def write(tmp):
         rows = (
             table(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_linenumber", "l_returnflag")
@@ -402,14 +347,15 @@ def seqfile_permissive_corrupt_tail(spark, sf_dir):
                 "value": pa.array([r["l_returnflag"] for r in rows], pa.string()),
             }
         )
-        os.makedirs(os.path.dirname(final), exist_ok=True)
-        tmp = final + "." + uuid.uuid4().hex[:8]
         core.write_table(tmp, t)
         with open(tmp, "ab") as f:
             f.write(b"\xff" * 64)  # torn-write garbage after the last block
-        os.rename(tmp, final)
+
+    path = materialize(
+        ("seq_cache", sf_key(sf_dir), "lineitem_corrupt.seq"), write
+    )
     df = (
-        spark.read.format("hadoop_seq").option("mode", "PERMISSIVE").load(final)
+        spark.read.format("hadoop_seq").option("mode", "PERMISSIVE").load(path)
     )
     return (
         df.groupBy("value")
@@ -472,26 +418,19 @@ def _mapfile_orders_dir(spark, sf_dir: str) -> str:
     """Idempotently materialize orders (o_orderkey → o_totalprice) as
     range-partitioned MapFile directories (the MapFileOutputFormat
     contract: disjoint sorted maps)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "orders_mapfile")
-    if os.path.isdir(final) and any(
-        f.startswith("part-") for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    (
-        table(spark, sf_dir, "orders")
+    return _roundtrip_dir(
+        spark,
+        sf_dir,
+        "orders_mapfile",
+        lambda: table(spark, sf_dir, "orders")
         .select(
             F.col("o_orderkey").cast("long").alias("key"),
             F.col("o_totalprice").cast("double").alias("value"),
         )
-        .repartitionByRange(4, "key")
-        .write.format("hadoop_map")
-        .option("block_records", "1024")
-        .mode("append")
-        .save(tmp)
+        .repartitionByRange(4, "key"),
+        {"block_records": "1024"},
+        fmt="hadoop_map",
     )
-    return publish_dir(tmp, final, _has_file(prefix="part-"))
 
 
 @register(
@@ -557,28 +496,20 @@ def _bloommap_even_orders_dir(spark, sf_dir: str) -> str:
     """Bloom-augmented MapFile of the EVEN-keyed half of orders — the
     shape of an incremental-ingest dedup corpus that a new batch
     probes for membership."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "orders_bloommap")
-    if os.path.isdir(final) and any(
-        f.startswith("part-") for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    (
-        table(spark, sf_dir, "orders")
+    return _roundtrip_dir(
+        spark,
+        sf_dir,
+        "orders_bloommap",
+        lambda: table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 2 == 0)
         .select(
             F.col("o_orderkey").cast("long").alias("key"),
             F.col("o_totalprice").cast("double").alias("value"),
         )
-        .repartitionByRange(4, "key")
-        .write.format("hadoop_map")
-        .option("bloom", "true")
-        .option("block_records", "1024")
-        .mode("append")
-        .save(tmp)
+        .repartitionByRange(4, "key"),
+        {"bloom": "true", "block_records": "1024"},
+        fmt="hadoop_map",
     )
-    return publish_dir(tmp, final, _has_file(prefix="part-"))
 
 
 @register(
@@ -616,28 +547,21 @@ def _setfile_ledger_dir(spark, sf_dir: str) -> str:
     already-ingested corpus slice (doc_id % 3 != 0) as sorted
     NullWritable-valued maps — what an incremental pipeline keeps
     between batches."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "fingerprint_setfile")
-    if os.path.isdir(final) and any(
-        f.startswith("part-") for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
     from ..functions.text import fingerprint
 
-    (
-        table(spark, sf_dir, "documents")
+    return _roundtrip_dir(
+        spark,
+        sf_dir,
+        "fingerprint_setfile",
+        lambda: table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 != 0)
         .select(fingerprint(F.col("text")).alias("key"))
         .distinct()
         .select("key", F.lit(None).alias("value"))
-        .repartitionByRange(2, "key")
-        .write.format("hadoop_map")
-        .option("block_records", "512")
-        .mode("append")
-        .save(tmp)
+        .repartitionByRange(2, "key"),
+        {"block_records": "512"},
+        fmt="hadoop_map",
     )
-    return publish_dir(tmp, final, _has_file(prefix="part-"))
 
 
 @register(
@@ -692,28 +616,19 @@ def _tombstone_dir(spark, sf_dir: str) -> str:
     request set: user_id % 37 == 0) as a SetFile — sorted
     NullWritable-valued keys, the durable record a deletion pipeline
     keeps so every future batch can re-apply the erasure."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "gdpr_tombstones")
-    if os.path.isdir(final) and any(
-        f.startswith("part-") for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    (
-        table(spark, sf_dir, "events")
+    return _roundtrip_dir(
+        spark,
+        sf_dir,
+        "gdpr_tombstones",
+        lambda: table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 37 == 0)
-        .select(
-            F.format_string("%012d", F.col("user_id")).alias("key")
-        )
+        .select(F.format_string("%012d", F.col("user_id")).alias("key"))
         .distinct()
         .select("key", F.lit(None).alias("value"))
-        .repartitionByRange(2, "key")
-        .write.format("hadoop_map")
-        .option("block_records", "512")
-        .mode("append")
-        .save(tmp)
+        .repartitionByRange(2, "key"),
+        {"block_records": "512"},
+        fmt="hadoop_map",
     )
-    return publish_dir(tmp, final, _has_file(prefix="part-"))
 
 
 @register(
@@ -771,27 +686,20 @@ def _mapfile_sparse_orders_dir(spark, sf_dir: str) -> str:
     GAPS are the point: floor/ceiling probes between stored keys are
     what getClosest exists for (the dense orders fixture always
     exact-hits)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "orders_mapfile_sparse7")
-    if os.path.isdir(final) and any(
-        f.startswith("part-") for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    (
-        table(spark, sf_dir, "orders")
+    return _roundtrip_dir(
+        spark,
+        sf_dir,
+        "orders_mapfile_sparse7",
+        lambda: table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 7 == 0)
         .select(
             F.col("o_orderkey").cast("long").alias("key"),
             F.col("o_totalprice").cast("double").alias("value"),
         )
-        .repartitionByRange(4, "key")
-        .write.format("hadoop_map")
-        .option("block_records", "256")
-        .mode("append")
-        .save(tmp)
+        .repartitionByRange(4, "key"),
+        {"block_records": "256"},
+        fmt="hadoop_map",
     )
-    return publish_dir(tmp, final, _has_file(prefix="part-"))
 
 
 @register(
@@ -896,25 +804,17 @@ def _sorter_merged_dir(spark, sf_dir: str) -> str:
         )
         .repartition(8),
     )
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE_ROOT, key, "orders_sorter_merge")
-    if os.path.isdir(final) and any(
-        f.startswith("part-") for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    (
-        spark.read.format("hadoop_seq")
+    return _roundtrip_dir(
+        spark,
+        sf_dir,
+        "orders_sorter_merge",
+        lambda: spark.read.format("hadoop_seq")
         .load(shards)
         .repartitionByRange(4, "key")
-        .sortWithinPartitions("key")
-        .write.format("hadoop_map")
-        .option("assume_sorted", "true")
-        .option("block_records", "1024")
-        .mode("append")
-        .save(tmp)
+        .sortWithinPartitions("key"),
+        {"assume_sorted": "true", "block_records": "1024"},
+        fmt="hadoop_map",
     )
-    return publish_dir(tmp, final, _has_file(prefix="part-"))
 
 
 @register(

@@ -18,36 +18,11 @@ native reader.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import functions as F
 
+from hadoop_formats_spark.cachedir import cache_path, materialize, sf_key
+
 from .registry import register, table
-
-from hadoop_formats_spark.cachedir import cache_path
-
-_CACHE = cache_path("fmt_cache")
-
-
-def _materialize(sf_dir: str, name: str, write) -> str:
-    """Idempotently write a dataset under /tmp (atomic rename; losing a
-    concurrent race is fine — the winner's output is identical)."""
-    key = sf_dir.strip("/").replace("/", "_")
-    final = os.path.join(_CACHE, key, name)
-    if os.path.isdir(final) and any(
-        not f.startswith((".", "_")) for f in os.listdir(final)
-    ):
-        return final
-    tmp = final + "." + uuid.uuid4().hex[:8]
-    write(tmp)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return final
 
 
 @register(
@@ -63,9 +38,8 @@ def _materialize(sf_dir: str, name: str, write) -> str:
     "aggregated by segment.",
 )
 def csv_write_read_roundtrip(spark, sf_dir):
-    path = _materialize(
-        sf_dir,
-        "customer_csv",
+    path = materialize(
+        ("fmt_cache", sf_key(sf_dir), "customer_csv"),
         lambda tmp: (
             table(spark, sf_dir, "customer")
             .select("c_custkey", "c_mktsegment", "c_acctbal")
@@ -100,9 +74,8 @@ def csv_write_read_roundtrip(spark, sf_dir):
     "by the head word of p_type.",
 )
 def json_lines_roundtrip(spark, sf_dir):
-    path = _materialize(
-        sf_dir,
-        "part_json",
+    path = materialize(
+        ("fmt_cache", sf_key(sf_dir), "part_json"),
         lambda tmp: (
             table(spark, sf_dir, "part")
             .select("p_partkey", "p_type", "p_retailprice")
@@ -136,9 +109,8 @@ def json_lines_roundtrip(spark, sf_dir):
     "format — same pushdown/pruning as parquet.",
 )
 def orc_write_roundtrip(spark, sf_dir):
-    path = _materialize(
-        sf_dir,
-        "supplier_orc",
+    path = materialize(
+        ("fmt_cache", sf_key(sf_dir), "supplier_orc"),
         lambda tmp: (
             table(spark, sf_dir, "supplier")
             .select("s_suppkey", "s_nationkey", "s_acctbal")
@@ -172,9 +144,8 @@ def orc_write_roundtrip(spark, sf_dir):
     "document, so it splits like any text source at scale.",
 )
 def xml_write_read_roundtrip(spark, sf_dir):
-    path = _materialize(
-        sf_dir,
-        "nation_xml",
+    path = materialize(
+        ("fmt_cache", sf_key(sf_dir), "nation_xml"),
         lambda tmp: (
             table(spark, sf_dir, "nation")
             .select("n_nationkey", "n_name", "n_regionkey")
@@ -230,9 +201,8 @@ def xml_write_read_roundtrip(spark, sf_dir):
 )
 def partition_overwrite_dynamic(spark, sf_dir):
     yr = F.year("o_orderdate").cast("int").alias("yr")
-    path = _materialize(
-        sf_dir,
-        "orders_by_year_backfilled",
+    path = materialize(
+        ("fmt_cache", sf_key(sf_dir), "orders_by_year_backfilled"),
         lambda tmp: _dynamic_backfill(spark, sf_dir, tmp),
     )
     return (
@@ -300,17 +270,15 @@ def compact_small_files(spark, sf_dir):
 
     target_rows = 20_000
     li = table(spark, sf_dir, "lineitem").select("l_orderkey")
-    small = _materialize(
-        sf_dir,
-        "li_small16",
+    small = materialize(
+        ("fmt_cache", sf_key(sf_dir), "li_small16"),
         lambda p: li.repartition(16).write.parquet(p),
     )
     before = spark.read.parquet(small)
     n = before.count()
     n_after = max(1, math.ceil(n / target_rows))
-    compacted = _materialize(
-        sf_dir,
-        "li_compacted",
+    compacted = materialize(
+        ("fmt_cache", sf_key(sf_dir), "li_compacted"),
         lambda p: spark.read.parquet(small).repartition(n_after).write.parquet(p),
     )
     after = spark.read.parquet(compacted)
@@ -350,9 +318,8 @@ def compact_small_files(spark, sf_dir):
 )
 def parquet_schema_evolution(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    path = _materialize(
-        sf_dir,
-        "orders_evolved",
+    path = materialize(
+        ("fmt_cache", sf_key(sf_dir), "orders_evolved"),
         lambda p: (
             o.filter(F.col("o_orderkey") < 1000)
             .select("o_orderkey", "o_totalprice")
@@ -404,7 +371,7 @@ def parquet_schema_evolution(spark, sf_dir):
     "change results.",
 )
 def layout_bucketed_join_no_shuffle(spark, sf_dir):
-    key = sf_dir.strip("/").replace("/", "_").replace(".", "_")
+    key = sf_key(sf_dir).replace(".", "_")
     ot, lt = f"bkt_orders_{key}", f"bkt_lineitem_{key}"
     if not spark.catalog.tableExists(ot):
         (
@@ -418,7 +385,7 @@ def layout_bucketed_join_no_shuffle(spark, sf_dir):
             .format("parquet")
             .bucketBy(8, "o_orderkey")
             .sortBy("o_orderkey")
-            .option("path", os.path.join(_CACHE, key, "bkt_orders"))
+            .option("path", cache_path("fmt_cache", key, "bkt_orders"))
             .saveAsTable(ot)
         )
     if not spark.catalog.tableExists(lt):
@@ -430,7 +397,7 @@ def layout_bucketed_join_no_shuffle(spark, sf_dir):
             .format("parquet")
             .bucketBy(8, "l_orderkey")
             .sortBy("l_orderkey")
-            .option("path", os.path.join(_CACHE, key, "bkt_lineitem"))
+            .option("path", cache_path("fmt_cache", key, "bkt_lineitem"))
             .saveAsTable(lt)
         )
     o = spark.table(ot)
@@ -471,9 +438,8 @@ def zorder_orders_path(spark, sf_dir: str, nfiles: int = 8) -> str:
 
     # custkey and day-number are already small non-negative ints, so
     # they feed the interleave raw (no rank coding pass needed)
-    return _materialize(
-        sf_dir,
-        f"orders_zorder_{nfiles}",
+    return materialize(
+        ("fmt_cache", sf_key(sf_dir), f"orders_zorder_{nfiles}"),
         lambda tmp: (
             table(spark, sf_dir, "orders")
             .withColumn(
@@ -563,8 +529,9 @@ def _quarantine_dirs(spark, sf_dir: str) -> tuple[str, str]:
 
         return _w
 
-    qdir = _materialize(sf_dir, "events_dq_quarantine", write("q"))
-    cdir = _materialize(sf_dir, "events_dq_clean", write("c"))
+    key = sf_key(sf_dir)
+    qdir = materialize(("fmt_cache", key, "events_dq_quarantine"), write("q"))
+    cdir = materialize(("fmt_cache", key, "events_dq_clean"), write("c"))
     return cdir, qdir
 
 

@@ -1008,48 +1008,25 @@ def stream_sliding_topk_trending(spark, sf_dir):
            max(value) AS max_value
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    doc="Per-type running (count, max) on Spark 4's "
-    "transformWithStateInPandas — the successor stateful API "
-    "(typed named ValueState handles, RocksDB-backed state with "
-    "changelog checkpointing, timers/TTL) that a long-running 100 TB "
-    "ingest should target over applyInPandasWithState.  Replayed "
-    "availableNow over the bounded source, the final per-key emission "
-    "must equal the batch aggregate; max_value is an actual data "
-    "value, bit-identical across engines.  The RocksDB provider is "
-    "scoped to this query and restored after.",
+    doc="Per-type running (count, max) held in per-key state on "
+    "applyInPandasWithState (Spark 4's transformWithStateInPandas "
+    "needs the google.protobuf package, which this package does not "
+    "depend on).  Replayed availableNow over the bounded source, the final "
+    "per-key emission must equal the batch aggregate; max_value is an "
+    "actual data value, bit-identical across engines.",
 )
 def stream_tws_running_stats(spark, sf_dir):
-    from ..streaming import tws_available, tws_running_stats
+    from ..streaming import tws_running_stats
 
-    use_tws = tws_available()
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
+    s = _events_stream(spark, sf_dir).select("event_type", "value")
+    out = _run_to_memory(
+        tws_running_stats(s, "event_type", "value"),
+        spark,
+        output_mode="update",
+        state_partitions=2,
+        # update-mode NoTimeout stateful op: emits in data batches (r16)
+        final_no_data_batch=False,
     )
-    if use_tws:  # transformWithState requires the RocksDB provider
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        s = _events_stream(spark, sf_dir).select("event_type", "value")
-        out = _run_to_memory(
-            tws_running_stats(s, "event_type", "value"),
-            spark,
-            output_mode="update",
-            state_partitions=2,
-            # update-mode NoTimeout stateful op: emits in data batches (r16)
-            final_no_data_batch=False,
-        )
-    finally:
-        if not use_tws:
-            pass  # provider untouched
-        elif prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
     # availableNow may split the replay into several micro-batches:
     # Update mode emits one row per key per batch — keep the LAST
     # emission per key (the running total)

@@ -162,10 +162,46 @@ class SeqFileDataSource(DataSource):
             raise ValueError(f"unknown columns {bad}; sequence files have (key, value)")
         return wanted
 
+    def _check_schema(self, schema: StructType) -> None:
+        """A given schema may name only ``key``/``value``, each with the
+        type the first file's header declares; anything else fails
+        here, on the driver, instead of as a JVM type error in every
+        task.  A ``block_counts`` read has its own schema, and a stream
+        directory may still be empty."""
+        if self.options.get("block_counts", "").lower() == "true":
+            return
+        paths = self._paths()
+        if not paths or not os.path.isfile(paths[0]):
+            return
+        try:
+            header = core.read_header(paths[0])
+        except core.SeqFileError:
+            return  # a torn header is the scan's to report, under ``mode``
+        classes = {"key": header.key_class, "value": header.value_class}
+        for f in schema.fields:
+            given = f.dataType.simpleString()
+            cls = classes.get(f.name)
+            if cls is None:
+                raise core.SeqFileError(
+                    f"schema field {f.name!r} ({given}) is not a column of "
+                    f"{paths[0]}: its header has key {header.key_class}, "
+                    f"value {header.value_class}"
+                )
+            if cls not in core.WRITABLES:
+                continue  # unsupported class: the decode names it
+            want = from_arrow_type(core.WRITABLES[cls][0])
+            if f.dataType != want:
+                raise core.SeqFileError(
+                    f"schema field {f.name!r} is {given}, but the header of "
+                    f"{paths[0]} declares {f.name} {cls} ({want.simpleString()})"
+                )
+
     def reader(self, schema: StructType) -> "SeqFileReader":
+        self._check_schema(schema)
         return SeqFileReader(self, schema)
 
     def streamReader(self, schema: StructType) -> "SeqFileStreamReader":
+        self._check_schema(schema)
         return SeqFileStreamReader(self, schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> "SeqFileWriter":

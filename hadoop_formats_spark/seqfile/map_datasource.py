@@ -87,6 +87,7 @@ class MapFileDataSource(SeqFileDataSource):
         ]
 
     def reader(self, schema: StructType) -> "MapFileReader":
+        self._check_schema(schema)
         return MapFileReader(self, schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> "MapFileWriter":

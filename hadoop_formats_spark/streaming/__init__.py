@@ -107,76 +107,6 @@ def run_available_now(
     return spark.table(name)
 
 
-def tws_group_minmax(
-    stream_df: DataFrame,
-    key_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Custom stateful operator on the transformWithStateInPandas API
-    (Spark 4's successor to applyInPandasWithState): per-key running
-    (count, min, max) held in a ValueState.  The handle-based API gives
-    typed state cells, per-state TTL, and timers — this operator uses
-    just a ValueState so the semantics stay SQL-checkable.
-
-    NOT runnable in this container: the transformWithState driver
-    worker needs ``google.protobuf`` (absent here, installs forbidden)
-    — it fails at query start with STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE.  Re-probed at the start of round 13
-    (2026-08-16), round 14 (2026-08-16), round 15 (2026-08-16), and
-    round 16 (2026-08-17): ``import google.protobuf`` still fails,
-    gate stays.
-    The operator is kept (correct per the documented API, verified to
-    reach the driver-worker boundary) for environments with protobuf;
-    ``stateful_group_stats`` below is the applyInPandasWithState
-    equivalent that runs everywhere and carries the driver-checked
-    query."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class MinMax(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "mm", "n bigint, mn double, mx double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, mn, mx = 0, None, None
-            if self._state.exists():
-                n, mn, mx = self._state.get()
-            for pdf in rows:
-                vals = pdf[value_col].astype(float)
-                n += len(vals)
-                lo, hi = float(vals.min()), float(vals.max())
-                mn = lo if mn is None else min(mn, lo)
-                mx = hi if mx is None else max(mx, hi)
-            self._state.update((n, mn, mx))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n],
-                    "min_value": [mn],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream_df.groupBy(key_col).transformWithStateInPandas(
-        MinMax(),
-        outputStructType=(
-            f"{key_col} bigint, n_events bigint, "
-            "min_value double, max_value double"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def ttl_min_registry(
     stream_df: DataFrame,
     key_cols: list[str],
@@ -605,104 +535,19 @@ def stateful_last_touch(
     )
 
 
-def tws_available() -> bool:
-    """True when the transformWithState Python worker can run here
-    (its state-server protocol needs the ``google.protobuf`` package)."""
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def tws_running_stats(
     stream_df: DataFrame,
     key_col: str,
     value_col: str,
 ) -> DataFrame:
-    """Custom stateful operator on Spark 4's transformWithStateInPandas
-    API (the successor to applyInPandasWithState): per-key running
-    (count, max) held in a typed ValueState, one row emitted per key
-    per micro-batch.
-
-    Why the new API matters at scale: state is a NAMED, typed handle
-    backed by the RocksDB state-store provider (required — set by the
-    caller for the query's lifetime), which gives incremental
-    checkpointing + changelog uploads instead of full HDFS-backed
-    snapshots, unbounded-beyond-memory state, and multiple independent
-    state variables (+ timers, TTL) per processor — the feature set a
-    long-running 100 TB ingest needs.  Parallelism contract is the
-    same as the older API: tasks walk keys serially through pandas, so
-    state partitions are the unit (see run_available_now).
-
-    ENV GATE: the transformWithState Python worker speaks protobuf to
-    the JVM state server; if the ``google.protobuf`` package is absent
-    (it is not installed in this container) the operator falls back to
-    an applyInPandasWithState implementation with IDENTICAL semantics
-    (same per-key (count, max) state, same one-row-per-key-per-batch
-    Update emission) so callers and oracles see the same result.
-    """
-    _tws_available = tws_available()
+    """Per-key running (count, max), one row emitted per key per
+    micro-batch, on ``applyInPandasWithState``.  Spark 4's successor
+    API, ``transformWithStateInPandas``, cannot run without the
+    ``google.protobuf`` package (its Python worker speaks protobuf to
+    the JVM state server), so this operator keeps the older API.
+    Tasks walk keys serially through pandas, so state partitions are
+    the unit of parallelism (see run_available_now)."""
     import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            schema = StructType(
-                [
-                    StructField("n", LongType()),
-                    StructField("mx", DoubleType()),
-                ]
-            )
-            self._agg = handle.getValueState("agg", schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, mx = 0, None
-            for pdf in rows:
-                n += len(pdf)
-                vals = pdf[value_col].dropna()
-                if len(vals):
-                    m = float(vals.max())
-                    mx = m if mx is None else max(mx, m)
-            if self._agg.exists():
-                pn, pmx = self._agg.get()
-                n += pn
-                if pmx is not None:
-                    mx = pmx if mx is None else max(mx, pmx)
-            self._agg.update((n, mx))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "n_events": [n],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    if _tws_available:
-        return stream_df.groupBy(key_col).transformWithStateInPandas(
-            RunningStats(),
-            outputStructType=(
-                f"{key_col} string, n_events bigint, max_value double"
-            ),
-            outputMode="Update",
-            timeMode="None",
-        )
-
-    # fallback: same state machine on the older pandas-stateful API
     from pyspark.sql.streaming.state import GroupState
 
     def update(key, pdfs, state: GroupState):

@@ -1,9 +1,22 @@
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Every cached fixture is built from scratch in each session: a private
+# cache root, set before the package is imported (cachedir reads it
+# once) and removed when the session ends.  A shared warm cache would
+# let a broken build path pass on a machine that built it earlier.
+_CACHE_DIR = tempfile.mkdtemp(prefix="hfs_cache_tests_")
+os.environ["HFS_CACHE_DIR"] = _CACHE_DIR
+
+
+def pytest_sessionfinish(session, exitstatus):
+    shutil.rmtree(_CACHE_DIR, ignore_errors=True)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

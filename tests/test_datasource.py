@@ -283,6 +283,46 @@ def test_write_rejects_bad_schema(spark, tmp_path):
         ).mode("append").save(str(tmp_path / "bad"))
 
 
+# text-int.seq is Text -> IntWritable: a given schema must say
+# (key string, value int), or a subset of it
+_WRONG_TYPE = (
+    "key bigint, value int",
+    r"SeqFileError: schema field 'key' is bigint, .*key org\.apache\.hadoop\.io\.Text",
+)
+_UNKNOWN_NAME = (
+    "key string, val int",
+    r"SeqFileError: schema field 'val' \(int\) .*value org\.apache\.hadoop\.io\.IntWritable",
+)
+
+
+@pytest.mark.parametrize("schema,match", [_WRONG_TYPE, _UNKNOWN_NAME])
+def test_batch_given_schema_checked_against_header(spark, schema, match):
+    with pytest.raises(Exception, match=match):
+        spark.read.format("hadoop_seq").schema(schema).load(TEXT_INT).collect()
+
+
+@pytest.mark.parametrize("schema,match", [_WRONG_TYPE, _UNKNOWN_NAME])
+def test_stream_given_schema_checked_against_header(spark, tmp_path, schema, match):
+    import shutil
+
+    shutil.copy(TEXT_INT, tmp_path)
+    with pytest.raises(Exception, match=match):
+        (
+            spark.readStream.format("hadoop_seq")
+            .schema(schema)
+            .load(str(tmp_path))
+            .writeStream.format("noop")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+
+
+def test_given_schema_matching_header_reads(spark):
+    df = spark.read.format("hadoop_seq").schema("key string").load(TEXT_INT)
+    assert df.count() == 100_000
+
+
 def test_stream_reader_incremental(spark, tmp_path):
     """Streaming source picks up files across microbatches exactly once."""
     import pyarrow as pa

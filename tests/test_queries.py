@@ -1060,8 +1060,7 @@ def test_udtf_expansion_matches_posexplode_equivalent(spark, sf_dir):
 
 def test_tws_running_stats_equals_batch(spark, sf_dir):
     # the stateful running (count, max) replayed availableNow must land
-    # exactly on the batch aggregate; exercises transformWithState when
-    # protobuf is present, the applyInPandasWithState fallback otherwise
+    # exactly on the batch aggregate
     from pyspark.sql import functions as F
 
     got = {

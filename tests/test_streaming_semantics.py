@@ -101,50 +101,6 @@ def test_late_event_dropped_after_watermark_advance(spark, tmp_path):
     assert batch_out["10:00"] == 2
 
 
-def test_tws_operator_gated_on_protobuf(spark, tmp_path):
-    """transformWithStateInPandas needs google.protobuf, absent in this
-    container.  The operator builds its plan fine; starting the query
-    must fail with the documented initialization error (not silently
-    mis-run), unless protobuf is importable, in which case it must
-    produce the batch-equivalent answer."""
-    import uuid as _uuid
-
-    import pytest as _pytest
-
-    from hadoop_formats_spark.streaming import tws_group_minmax
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.createDataFrame(
-        [(1, 10.0), (1, 20.0), (2, 5.0)], "user_id bigint, value double"
-    ).coalesce(1).write.parquet(str(src / "b1"))
-    stream = spark.readStream.schema("user_id bigint, value double").parquet(
-        str(src / "b1")
-    )
-    out = tws_group_minmax(stream, "user_id", "value")
-    name = "tws" + _uuid.uuid4().hex[:6]
-    try:
-        import google.protobuf  # noqa: F401
-
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if not have_protobuf:
-        with _pytest.raises(Exception, match="STREAM|crashed|Python"):
-            q.start().awaitTermination()
-    else:
-        q.start().awaitTermination()
-        got = {r["user_id"]: (r["n_events"], r["min_value"], r["max_value"])
-               for r in spark.table(name).collect()}
-        assert got == {1: (2, 10.0, 20.0), 2: (1, 5.0, 5.0)}
-
-
 def test_stream_band_registry_order_insensitive(spark, tmp_path):
     """The streaming MinHash band registry must converge to the SAME
     owners under any micro-batching: replay the same docs as 3 files

@@ -3,8 +3,8 @@
 The driver grades the FIRST 50 entries of ``queries()`` each round.
 Once every registered query has been driver-graded at least once (the
 coverage axis closed in round 10), the window becomes a RE-GRADE
-rotation with this priority (the policy sketched at
-``queries/registry.py`` round-11 comment, now executable):
+rotation with this priority (``PRIORITY_ORDER`` in
+``queries/registry.py`` is this tool's output):
 
   1. never-graded queries (new registrations — same-round discipline);
   2. queries whose last driver row was NON-GREEN (post-fix re-entry);
