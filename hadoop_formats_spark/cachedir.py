@@ -18,11 +18,13 @@ nothing is ever read from or written to a directory we don't own.
 and published: it owns the hit rule, the private build location and
 the atomic publish, and it verifies the published path before handing
 it out.  ``sf_key`` is the one spelling of a testdata directory inside
-a cache path.
+a cache path.  ``run_dir(prefix)`` is the one place a query gets a
+directory that lives only as long as the interpreter.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -60,6 +62,14 @@ def cache_root() -> str:
 def cache_path(*parts: str) -> str:
     """Join ``parts`` under the cache root (no directory creation)."""
     return os.path.join(cache_root(), *parts)
+
+
+def run_dir(prefix: str) -> str:
+    """A fresh directory under the cache root, removed at interpreter
+    exit and not before: the DataFrames a query returns read it lazily."""
+    path = tempfile.mkdtemp(prefix=prefix, dir=cache_root())
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def sf_key(sf_dir: str) -> str:

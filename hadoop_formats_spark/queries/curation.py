@@ -74,6 +74,7 @@ def sample_stratified_lang(spark: SparkSession, sf_dir: str):
 
 @register(
     "sample_mixture_balanced",
+    tier="extra",
     oracle="""
     WITH counts AS (
       SELECT lang, count(*) AS n FROM documents GROUP BY lang
@@ -181,6 +182,7 @@ def sessionize_events_batch(spark: SparkSession, sf_dir: str):
 
 @register(
     "curation_pipeline_docs",
+    tier="extra",
     oracle="""
     WITH filtered AS (
       SELECT doc_id, lang, source, text
@@ -230,6 +232,7 @@ def curation_pipeline_docs(spark: SparkSession, sf_dir: str):
 
 @register(
     "text_repetition_metrics",
+    tier="extra",
     oracle="""
     WITH g AS (
       SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS gram
@@ -260,6 +263,7 @@ def text_repetition_metrics(spark: SparkSession, sf_dir: str):
 
 @register(
     "contamination_ngram_overlap",
+    tier="extra",
     oracle="""
     WITH tr AS (
       SELECT DISTINCT doc_id, array_to_string(toks[i:i+4], ' ') AS shingle
@@ -306,6 +310,7 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str):
 
 @register(
     "pack_sequences_stats",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT lang, doc_id % 8 AS shard, doc_id,
@@ -345,6 +350,7 @@ def pack_sequences_stats(spark: SparkSession, sf_dir: str):
 
 @register(
     "pii_scrub_stats",
+    tier="extra",
     oracle="""
     WITH aug AS (
       SELECT doc_id,
@@ -461,6 +467,7 @@ def _corpus_stages(spark: SparkSession, sf_dir: str) -> dict:
 
 @register(
     "corpus_build_pipeline",
+    tier="extra",
     oracle="""
     WITH quality AS (
       SELECT doc_id, lang, text
@@ -745,6 +752,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str):
 
 @register(
     "sample_domain_quota",
+    tier="extra",
     oracle="""
     WITH ranked AS (
       SELECT source,
@@ -801,6 +809,7 @@ def sample_domain_quota(spark: SparkSession, sf_dir: str):
 
 @register(
     "dedup_chunk_boilerplate",
+    tier="extra",
     oracle="""
     WITH w AS (
       SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
@@ -843,6 +852,7 @@ def dedup_chunk_boilerplate(spark: SparkSession, sf_dir: str):
 
 @register(
     "split_train_holdout",
+    tier="extra",
     oracle="""
     WITH fp AS (
       SELECT md5(lower(trim(text))) AS fp,
@@ -960,6 +970,7 @@ _URL_SQL = """
 
 @register(
     "url_canonical_dedup",
+    tier="extra",
     oracle=f"""
     WITH u AS (
       SELECT {_URL_SQL} AS url FROM documents
@@ -1065,6 +1076,7 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str):
 
 @register(
     "filter_length_percentile",
+    tier="extra",
     oracle="""
     WITH q AS (
       SELECT lang,
@@ -1121,6 +1133,7 @@ def _register_weighted_sample():
 
     @register(
         "sample_weighted_quality",
+        tier="extra",
         oracle=f"""
         WITH s AS (
           SELECT doc_id, lang, {QUALITY_SQL} AS q,
@@ -1178,6 +1191,7 @@ _register_weighted_sample()
 
 @register(
     "funnel_conversion",
+    tier="extra",
     oracle="""
     WITH marked AS (
       SELECT user_id, ts, event_id, event_type,
@@ -1320,6 +1334,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str):
 
 @register(
     "curation_drop_waterfall",
+    tier="extra",
     oracle="""
     WITH quality AS (
       SELECT doc_id, lang, text
@@ -1429,6 +1444,7 @@ def curation_drop_waterfall(spark: SparkSession, sf_dir: str):
 
 @register(
     "dedup_substring_spans",
+    tier="extra",
     oracle="""
     WITH w AS (
       SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
@@ -1483,6 +1499,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str):
 
 @register(
     "dedup_containment_excerpts",
+    tier="extra",
     oracle="""
     WITH sh AS (
       SELECT DISTINCT doc_id, array_to_string(toks[i:i+2], ' ') AS shingle
@@ -1525,6 +1542,7 @@ def dedup_containment_excerpts(spark: SparkSession, sf_dir: str):
 
 @register(
     "sample_mixture_temperature",
+    tier="extra",
     oracle="""
     WITH counts AS (
       SELECT lang,
@@ -1721,6 +1739,7 @@ def curriculum_stage_assignment(spark: SparkSession, sf_dir: str):
 
 @register(
     "curation_ccnet_ppl_buckets",
+    tier="extra",
     oracle="""
     WITH t AS (
       SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents
@@ -1819,6 +1838,7 @@ def curation_ccnet_ppl_buckets(spark: SparkSession, sf_dir: str):
 
 @register(
     "transform_fim_split",
+    tier="extra",
     oracle="""
     WITH d AS (
       SELECT doc_id, lang, text, length(text) AS n
@@ -1941,6 +1961,7 @@ def transform_fim_split(spark: SparkSession, sf_dir: str):
 
 @register(
     "pack_length_bucketing_waste",
+    tier="extra",
     oracle="""
     WITH d AS (
       SELECT doc_id, lang,
@@ -2044,6 +2065,7 @@ def pack_length_bucketing_waste(spark: SparkSession, sf_dir: str):
 
 @register(
     "corpus_build_pipeline_v2",
+    tier="extra",
     oracle="""
     WITH t0 AS (
       SELECT doc_id, lang, text,
@@ -2203,6 +2225,7 @@ def corpus_build_pipeline_v2(spark: SparkSession, sf_dir: str):
 
 @register(
     "sample_dsir_importance",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT doc_id, lang,
@@ -2330,6 +2353,7 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str):
 
 @register(
     "sample_neyman_allocation",
+    tier="extra",
     oracle="""
     WITH f AS (
       SELECT o_orderkey, o_orderpriority AS stratum,

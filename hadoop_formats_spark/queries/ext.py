@@ -80,6 +80,7 @@ _MINHASH_SIG_SQL = ",\n    ".join(
 
 @register(
     "dedup_minhash_lsh",
+    tier="headline",
     oracle=f"""
     WITH {_SHINGLES_CTE},
     sig AS (
@@ -141,6 +142,7 @@ def _shingles_cte_n(n: int) -> str:
 
 @register(
     "scan_shingle_checksum_canary",
+    tier="headline",
     oracle=f"""
     WITH sh AS ({" UNION ALL ".join(_shingles_cte_n(n) for n in _CANARY_NS)})
     SELECT n,
@@ -275,6 +277,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 
 @register(
     "dedup_prefix_filter_join",
+    tier="extra",
     oracle=f"""
     WITH {_SHINGLES_CTE},
     {_JACCARD_TAIL.lstrip()}
@@ -305,6 +308,7 @@ def dedup_prefix_filter_join(spark, sf_dir):
 
 @register(
     "dedup_group_assignment",
+    tier="extra",
     oracle=f"""
     WITH RECURSIVE {_SHINGLES_CTE.lstrip()},
     {_JACCARD_TAIL.lstrip()},
@@ -340,6 +344,7 @@ def dedup_group_assignment(spark, sf_dir):
 
 @register(
     "dedup_keeper_by_quality",
+    tier="extra",
     oracle=f"""
     WITH RECURSIVE {_SHINGLES_CTE.lstrip()},
     {_JACCARD_TAIL.lstrip()},
@@ -436,6 +441,7 @@ _COS_SQL = (
 
 @register(
     "dedup_embedding_cosine",
+    tier="headline",
     oracle=f"""
     SELECT id_a, id_b, sim FROM (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_COS_SQL} AS sim
@@ -602,6 +608,7 @@ def dedup_embedding_lsh_recall(spark, sf_dir):
 
 @register(
     "ann_brute_force_topk",
+    tier="headline",
     oracle=f"""
     SELECT query_id, neighbor_id, sim, rnk FROM (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -625,6 +632,7 @@ def ann_brute_force_topk(spark, sf_dir):
 
 @register(
     "ann_filtered_topk",
+    tier="extra",
     oracle=f"""
     SELECT query_id, neighbor_id, sim, rnk FROM (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -762,6 +770,7 @@ _COS_PV = _COS_SQL.replace("a.embedding", "p.qemb").replace(
 
 @register(
     "ann_ivf_recall_at_3",
+    tier="extra",
     oracle=f"""
     WITH centroids AS (
       SELECT vec_id AS centroid_id, embedding FROM embeddings WHERE vec_id % 50 = 0
@@ -834,6 +843,7 @@ def ann_ivf_recall_at_3(spark, sf_dir):
 
 @register(
     "embedding_quantize_int8_error",
+    tier="extra",
     oracle="""
     WITH q AS (
       SELECT vec_id,
@@ -905,6 +915,7 @@ _KMEANS_UPDATE = """
 
 @register(
     "kmeans_cluster_profile",
+    tier="extra",
     oracle=f"""
     WITH cent0 AS (
       SELECT centroid_id, CAST(embedding AS DOUBLE[]) AS emb FROM (
@@ -953,6 +964,7 @@ def kmeans_cluster_profile(spark, sf_dir):
 
 @register(
     "dedup_semantic_semdedup",
+    tier="extra",
     oracle=f"""
     WITH cent0 AS (
       SELECT centroid_id, CAST(embedding AS DOUBLE[]) AS emb FROM (
@@ -1083,6 +1095,7 @@ def _pq_oracle(m: int, k: int, sub: int, iters: int) -> str:
 
 @register(
     "pq_encode_stats",
+    tier="extra",
     oracle=_pq_oracle(m=4, k=4, sub=16, iters=2),
     doc="Product quantization (m=4 subspaces × k=4 L2 codebooks, 2 "
     "Lloyd rounds, deterministic lowest-id init): per-(subspace, code) "
@@ -1161,6 +1174,7 @@ QUALITY_SQL = f"""(floor((0.4 * least(1.0, len(string_split(lower(text), ' ')) /
 
 @register(
     "text_quality_score",
+    tier="headline",
     oracle=f"""
     SELECT doc_id, {QUALITY_SQL} AS quality
     FROM documents ORDER BY doc_id
@@ -1176,6 +1190,7 @@ def text_quality_score(spark, sf_dir):
 
 @register(
     "pareto_frontier_quality_length",
+    tier="extra",
     # O(n log n) sort-based skyline oracle (VERDICT r15 #3): per-length
     # max quality, a running max over strictly longer lengths, keep a
     # length iff its qmax beats every longer length's.  Replaces the
@@ -1322,6 +1337,7 @@ def text_rolling_fingerprint(spark, sf_dir):
 
 @register(
     "text_tfidf_top_terms",
+    tier="extra",
     oracle="""
     WITH tok AS (
       SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
@@ -1400,6 +1416,7 @@ _BM25_CTES = f"""tokf AS (
 
 @register(
     "text_bm25_search",
+    tier="extra",
     oracle=f"""
     WITH {_BM25_CTES}
     SELECT doc_id,
@@ -1488,6 +1505,7 @@ def _mmr_oracle_sql(k: int = 5, pool: int = 20) -> str:
 
 @register(
     "search_mmr_rerank",
+    tier="extra",
     oracle=_mmr_oracle_sql(),
     doc="Maximal Marginal Relevance re-ranking (Carbonell & Goldstein "
     "SIGIR'98): greedily pick 5 of the top-20 cosine candidates for "
@@ -1573,6 +1591,7 @@ def search_mmr_rerank(spark, sf_dir):
 
 @register(
     "search_hybrid_rrf",
+    tier="extra",
     oracle=f"""
     WITH {_BM25_CTES},
     brank AS (
@@ -1705,6 +1724,7 @@ _WINNOW_PAIRS_SQL = """
 
 @register(
     "dedup_winnow_fingerprint_pairs",
+    tier="extra",
     oracle=_WINNOW_PAIRS_SQL,
     doc="Winnowing fingerprint matching (Schleimer/Wilkerson/Aiken "
     "SIGMOD'03 — MOSS): per-doc window-min selection over 3-gram "
@@ -1923,6 +1943,7 @@ def multimodal_decode_features(spark, sf_dir):
 
 @register(
     "multimodal_pnm_real_decode",
+    tier="extra",
     # Each document becomes a deterministic 8x8 P5 (grayscale PNM)
     # image — pixel j = (doc_id*7 + j) % 256 — so the ORACLE can
     # recompute the true pixel mean from first principles while Spark
@@ -2001,6 +2022,7 @@ def multimodal_pnm_real_decode(spark, sf_dir):
 
 @register(
     "multimodal_bmp_real_decode",
+    tier="extra",
     # Second real container beside PNM (VERDICT r13 #7): each document
     # becomes a deterministic 4x4 24-bit UNCOMPRESSED BMP — pixel j
     # (row-major from the top) has B=(id*3+j)%256, G=(id*5+j)%256,
@@ -2096,6 +2118,7 @@ def multimodal_bmp_real_decode(spark, sf_dir):
 
 @register(
     "multimodal_wav_real_decode",
+    tier="extra",
     # Third real container — AUDIO (VERDICT r13 #7 extended): each
     # document renders as a deterministic 64-sample 16-bit PCM mono
     # RIFF/WAV — sample j = ((doc_id*13 + j*7) % 401) - 200 — and the
@@ -2536,6 +2559,7 @@ def ann_projected_recall_at_3(spark, sf_dir):
 
 @register(
     "text_unigram_surprisal",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT doc_id, tok FROM (
@@ -2565,6 +2589,7 @@ def text_unigram_surprisal(spark, sf_dir):
 
 @register(
     "text_bigram_lm_score",
+    tier="extra",
     oracle="""
     WITH t AS (
       SELECT doc_id, string_split(lower(text), ' ') AS ts FROM documents
@@ -2604,6 +2629,7 @@ def text_bigram_lm_score(spark, sf_dir):
 
 @register(
     "text_char_entropy",
+    tier="extra",
     oracle="""
     WITH ch AS (
       SELECT doc_id,
@@ -2633,6 +2659,7 @@ def text_char_entropy(spark, sf_dir):
 
 @register(
     "text_pmi_collocations",
+    tier="extra",
     oracle="""
     WITH wt AS (
       SELECT list_filter(string_split(lower(text), ' '), t -> t <> '') AS w
@@ -2755,6 +2782,7 @@ def _pq_adc_oracle(m: int, k: int, sub: int, iters: int) -> str:
 
 @register(
     "ann_pq_adc_recall_at_3",
+    tier="extra",
     oracle=_pq_adc_oracle(m=4, k=16, sub=16, iters=2),
     doc="PQ search end-to-end: train 4x16 subspace codebooks, encode "
     "the corpus to 4 codes/vector, generate top-20 candidates by "
@@ -2803,6 +2831,7 @@ def ann_pq_adc_recall_at_3(spark, sf_dir):
 
 @register(
     "sketch_count_min_heavy_hitters",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT unnest(list_filter(string_split(lower(text), ' '),
@@ -2871,6 +2900,7 @@ def sketch_count_min_heavy_hitters(spark, sf_dir):
 
 @register(
     "sketch_kmv_distinct_union",
+    tier="extra",
     oracle="""
     WITH items AS (
       SELECT l_returnflag AS rf, l_orderkey % 2 AS half,
@@ -3005,6 +3035,7 @@ def sketch_kmv_distinct_union(spark, sf_dir):
 
 @register(
     "scd2_dimension_merge",
+    tier="extra",
     oracle="""
     WITH latest0 AS (
       SELECT user_id, event_type, ts FROM (
@@ -3142,6 +3173,7 @@ _ZTERMS_SQL = " + ".join(
 
 @register(
     "layout_zorder_clustering",
+    tier="extra",
     oracle=f"""
     WITH b AS (
       SELECT min(l_partkey) AS xlo, max(l_partkey) AS xhi,
@@ -3220,6 +3252,7 @@ def layout_zorder_clustering(spark, sf_dir):
 
 @register(
     "chunk_sliding_windows",
+    tier="extra",
     oracle="""
     WITH d AS (
       SELECT doc_id,
@@ -3317,6 +3350,7 @@ def _bpe_oracle(rounds: int = 3) -> str:
 
 @register(
     "bpe_train_merges",
+    tier="extra",
     oracle=_bpe_oracle(3),
     doc="Distributed BPE merge training (Sennrich 2016), 3 rounds: the "
     "word-frequency table is built once (partial-agg groupBy — raw "
@@ -3401,6 +3435,7 @@ _COPURCHASE_PAIRS_CTE = """
 
 @register(
     "graph_copurchase_pairs",
+    tier="extra",
     oracle=f"""
     WITH {_COPURCHASE_PAIRS_CTE},
     counts AS (
@@ -3436,6 +3471,7 @@ def graph_copurchase_pairs(spark, sf_dir):
 
 @register(
     "graph_triangle_count",
+    tier="extra",
     oracle=f"""
     WITH {_COPURCHASE_PAIRS_CTE},
     e AS (SELECT item_a AS a, item_b AS b FROM pairs WHERE support >= 2),
@@ -3470,6 +3506,7 @@ def graph_triangle_count(spark, sf_dir):
 
 @register(
     "graph_label_propagation",
+    tier="extra",
     oracle=f"""
     WITH {_COPURCHASE_PAIRS_CTE},
     ed AS (
@@ -3536,6 +3573,7 @@ def graph_label_propagation(spark, sf_dir):
 
 @register(
     "graph_pagerank_suppliers",
+    tier="extra",
     oracle=_pagerank_oracle(3),
     doc="PageRank (3 power iterations, d=0.85) over the bidirectional "
     "part<->supplier co-occurrence graph from lineitem — the canonical "
@@ -3567,6 +3605,7 @@ def graph_pagerank_suppliers(spark, sf_dir):
 
 @register(
     "snapshot_diff_orders",
+    tier="extra",
     oracle="""
     WITH v2 AS (
       SELECT o_orderkey, o_custkey, o_orderstatus,
@@ -3636,6 +3675,7 @@ def snapshot_diff_orders(spark, sf_dir):
 
 @register(
     "mv_incremental_maintenance",
+    tier="extra",
     # exact 1e-4-unit bigint folds throughout (round-15 full-registry
     # sf1 sweep: round(sum(double),2) diverged at 6.1M rows where the
     # engines' fold orders differ); exact integers also upgrade
@@ -3755,6 +3795,7 @@ def mv_incremental_maintenance(spark, sf_dir):
 
 @register(
     "sample_negatives_contrastive",
+    tier="extra",
     oracle="""
     WITH nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings),
     anchors AS (
@@ -3853,6 +3894,7 @@ from .registry import QUERIES as _QUERIES  # noqa: E402  (self-registry lookup)
 
 @register(
     "ann_ivf_index_persisted",
+    tier="extra",
     oracle=_QUERIES["ann_ivf_topk"].oracle,
     doc="IVF index LIFECYCLE: the index (corpus assignments + "
     "centroids) is trained once, PERSISTED to parquet with the "
@@ -3969,6 +4011,7 @@ def _bpe_compress_oracle(rounds: int = 3) -> str:
 
 @register(
     "bpe_apply_compression",
+    tier="extra",
     oracle=_bpe_compress_oracle(3),
     doc="The tokenizer side of BPE: the 3 globally-learned merges "
     "(same driver-held table bpe_train_merges certifies) are applied "
@@ -4014,6 +4057,7 @@ def bpe_apply_compression(spark, sf_dir):
 
 @register(
     "dedup_minhash_band_pr",
+    tier="extra",
     oracle=f"""
     WITH {_SHINGLES_CTE},
     sig AS (
@@ -4082,6 +4126,7 @@ _COS16_SQL = (
 
 @register(
     "ann_matryoshka_recall_at_3",
+    tier="extra",
     oracle=f"""
     WITH exact3 AS (
       SELECT query_id, neighbor_id FROM (
@@ -4140,6 +4185,7 @@ def ann_matryoshka_recall_at_3(spark, sf_dir):
 
 @register(
     "sketch_kmv_jaccard_intersect",
+    tier="extra",
     oracle="""
     WITH ha AS (
       SELECT h FROM (
@@ -4240,6 +4286,7 @@ def sketch_kmv_jaccard_intersect(spark, sf_dir):
 
 @register(
     "join_bloom_prefiltered",
+    tier="extra",
     oracle="""
     SELECT CAST(EXTRACT(year FROM o.o_orderdate) AS BIGINT) AS yr,
            CAST(count(*) AS BIGINT) AS n_items,
@@ -4287,6 +4334,7 @@ def join_bloom_prefiltered(spark, sf_dir):
 
 @register(
     "link_fuzzy_customer_names",
+    tier="extra",
     oracle="""
     WITH dirty AS (
       SELECT c_custkey AS d_id,
@@ -4368,6 +4416,7 @@ def link_fuzzy_customer_names(spark, sf_dir):
 
 @register(
     "scd2_point_in_time_join",
+    tier="extra",
     oracle="""
     WITH s AS (
       SELECT user_id, ts, event_id, event_type,
@@ -4444,6 +4493,7 @@ def scd2_point_in_time_join(spark, sf_dir):
 
 @register(
     "cohort_retention_weekly",
+    tier="extra",
     oracle="""
     WITH cohort AS (
       SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE)
@@ -4510,6 +4560,7 @@ def cohort_retention_weekly(spark, sf_dir):
 
 @register(
     "intervals_merge_coverage",
+    tier="extra",
     oracle="""
     WITH iv AS (
       SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS s,
@@ -4591,6 +4642,7 @@ def intervals_merge_coverage(spark, sf_dir):
 
 @register(
     "events_trigram_mining",
+    tier="extra",
     oracle="""
     WITH seq AS (
       SELECT user_id, event_type AS t3,
@@ -4637,6 +4689,7 @@ def events_trigram_mining(spark, sf_dir):
 
 @register(
     "timeseries_ewma_anomaly",
+    tier="extra",
     oracle="""
     WITH RECURSIVE hourly AS (
       SELECT event_type, date_trunc('hour', ts) AS h,
@@ -4753,6 +4806,7 @@ def _ohlc_order_key(ts, event_id):
 
 @register(
     "timeseries_downsample_ohlc",
+    tier="extra",
     # open/close need a DETERMINISTIC "first/last by time" even when
     # two events share a timestamp: the order key is the zero-padded
     # string (epoch_us + pre-1970-safe offset, event_id), which both
@@ -4817,6 +4871,7 @@ def timeseries_downsample_ohlc(spark, sf_dir):
 
 @register(
     "timeseries_interpolate_linear",
+    tier="extra",
     # Linear gap-fill between known points (the `interpolate` verb of
     # Timescale/Influx/pandas, beside the existing resample_ffill LOCF
     # row): hourly means of a sparse series (purchase events with
@@ -4951,6 +5006,7 @@ def timeseries_interpolate_linear(spark, sf_dir):
 
 @register(
     "session_entry_exit_flows",
+    tier="extra",
     oracle="""
     WITH marked AS (
       SELECT user_id, ts, event_id, event_type,
@@ -5045,6 +5101,7 @@ def session_entry_exit_flows(spark, sf_dir):
 
 @register(
     "embedding_centroid_drift",
+    tier="extra",
     oracle="""
     WITH dims AS (
       SELECT label,
@@ -5136,6 +5193,7 @@ def embedding_centroid_drift(spark, sf_dir):
 
 @register(
     "dedup_cross_source_matrix",
+    tier="extra",
     oracle="""
     WITH fps AS (
       SELECT DISTINCT md5(array_to_string(toks[i:i+2], ' ')) AS fp, source
@@ -5287,6 +5345,7 @@ def dedup_cross_source_matrix(spark, sf_dir):
 
 @register(
     "embedding_covariance_pca",
+    tier="extra",
     oracle="""
     WITH v AS (
       SELECT vec_id,
@@ -5324,6 +5383,7 @@ def embedding_covariance_pca(spark, sf_dir):
 
 @register(
     "text_zipf_fit",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT lang, tok FROM (
@@ -5390,6 +5450,7 @@ def text_zipf_fit(spark, sf_dir):
 
 @register(
     "timeseries_autocorrelation",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT date_trunc('hour', min(ts)) AS h0,
@@ -5485,6 +5546,7 @@ def timeseries_autocorrelation(spark, sf_dir):
 
 @register(
     "graph_bfs_distances",
+    tier="extra",
     oracle=f"""
     WITH RECURSIVE {_COPURCHASE_PAIRS_CTE},
     e AS (
@@ -5549,6 +5611,7 @@ def graph_bfs_distances(spark, sf_dir):
 
 @register(
     "timeseries_cusum_changepoint",
+    tier="extra",
     oracle="""
     WITH RECURSIVE daily AS (
       SELECT event_type, date_trunc('day', ts) AS d,
@@ -5983,6 +6046,7 @@ def _ivfpq_oracle(m: int, k: int, sub: int, iters: int, nprobe: int) -> str:
 
 @register(
     "ann_ivfpq_adc_recall_at_3",
+    tier="extra",
     oracle=_ivfpq_oracle(m=4, k=16, sub=16, iters=2, nprobe=2),
     doc="IVF-PQ — the full production billion-scale ANN stack in one "
     "certified row: IVF cluster assignment prunes the scan to each "
@@ -6068,6 +6132,7 @@ def ann_ivfpq_adc_recall_at_3(spark, sf_dir):
 
 @register(
     "sample_hard_negatives_band",
+    tier="extra",
     oracle=f"""
     WITH centroids AS (
       SELECT vec_id AS centroid_id, embedding FROM embeddings
@@ -6186,6 +6251,7 @@ def sample_hard_negatives_band(spark, sf_dir):
 
 @register(
     "multimodal_resize_checksum",
+    tier="extra",
     oracle="""
     WITH f AS (
       SELECT doc_id, hex(encode(text)) AS h,
@@ -6258,6 +6324,7 @@ def multimodal_resize_checksum(spark, sf_dir):
 
 @register(
     "sketch_kmv_jaccard_pair",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT lang,

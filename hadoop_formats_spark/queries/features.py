@@ -18,6 +18,7 @@ from .registry import register, table
 
 @register(
     "feature_target_encoding_oof",
+    tier="extra",
     oracle="""
     WITH j AS (
       SELECT c.c_mktsegment AS segment,
@@ -96,6 +97,7 @@ def feature_target_encoding_oof(spark: SparkSession, sf_dir: str):
 
 @register(
     "feature_woe_iv",
+    tier="extra",
     oracle="""
     WITH labeled AS (
       SELECT o.o_orderkey, o.o_totalprice AS price,
@@ -239,6 +241,7 @@ def feature_woe_iv(spark: SparkSession, sf_dir: str):
 
 @register(
     "customer_rfm_segments",
+    tier="extra",
     oracle="""
     WITH per_cust AS (
       SELECT o_custkey,
@@ -344,6 +347,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str):
 
 @register(
     "attribution_last_touch",
+    tier="extra",
     oracle="""
     WITH base AS (
       SELECT user_id, ts, event_id, event_type, value
@@ -509,6 +513,7 @@ def _logreg_fit(f) -> tuple[float, float, float]:
 
 @register(
     "ml_logreg_quality_train",
+    tier="extra",
     oracle=_logreg_oracle(),
     doc="Distributed logistic-regression training (3 full-batch "
     "gradient-descent steps, lr=1, is-English target over "
@@ -648,6 +653,7 @@ def ml_linreg_normal_equations(spark, sf_dir):
 
 @register(
     "ml_naive_bayes_lang_train",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT lang, unnest(string_split(lower(text), ' ')) AS tok
@@ -733,6 +739,7 @@ def ml_naive_bayes_lang_train(spark: SparkSession, sf_dir: str):
 
 @register(
     "feature_hashing_trick",
+    tier="extra",
     oracle="""
     WITH toks AS (
       SELECT doc_id, lang,
@@ -847,6 +854,7 @@ def gopher_flags(d):
 
 @register(
     "text_gopher_quality_rules",
+    tier="extra",
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
@@ -938,6 +946,7 @@ def text_gopher_quality_rules(spark: SparkSession, sf_dir: str):
 
 @register(
     "ml_naive_bayes_score_confusion",
+    tier="extra",
     oracle="""
     WITH train AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
     test AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
@@ -1150,6 +1159,7 @@ def _logreg_calibration_oracle() -> str:
 
 @register(
     "ml_logreg_calibration_bins",
+    tier="extra",
     oracle=_logreg_calibration_oracle(),
     doc="Reliability diagram for the trained quality classifier — the "
     "model-eval step after ml_logreg_quality_train (same 3-step GD "
@@ -1197,6 +1207,7 @@ def ml_logreg_calibration_bins(spark, sf_dir):
 
 @register(
     "ml_conformal_interval_coverage",
+    tier="extra",
     oracle="""
     WITH f AS (
       SELECT o_orderkey, o_totalprice AS y,

@@ -37,6 +37,7 @@ from .registry import register, table
 
 @register(
     "q1_pricing_summary",
+    tier="headline",
     # EXACT money folds (round-15, caught by the first strict sf1
     # sweep): raw double sums of price expressions agreed ulp-for-ulp
     # with DuckDB up to sf0.1 but diverged at 6.1 M rows, where the
@@ -458,6 +459,7 @@ def join_inner_revenue_by_nation(spark, sf_dir):
 
 @register(
     "join_5way_region_rollup_revenue",
+    tier="headline",
     # exact 1e-4-unit bigint revenue fold (q1 discipline, round-15
     # strict sf1 sweep): the raw double fold diverged at 6.1 M rows
     oracle="""
@@ -673,6 +675,7 @@ def join_theta_quantity_near_size(spark, sf_dir):
 
 @register(
     "join_interval_binned_price_band",
+    tier="extra",
     oracle="""
     SELECT p_brand, count(*) AS n_in_band,
            round(avg(l_extendedprice - p_retailprice), 4) AS avg_gap
@@ -746,6 +749,7 @@ def join_salted_lineitem_orders(spark, sf_dir):
 
 @register(
     "join_6way_supplier_nation_revenue",
+    tier="headline",
     oracle="""
     SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2)
              AS revenue,
@@ -791,6 +795,7 @@ def join_6way_supplier_nation_revenue(spark, sf_dir):
 
 @register(
     "join_asof_purchase_last_click",
+    tier="headline",
     oracle="""
     WITH clicks AS (
       SELECT user_id, ts, max(event_id) AS click_id
@@ -845,6 +850,7 @@ def join_asof_purchase_last_click(spark, sf_dir):
 
 @register(
     "join_asof_forward_tolerance",
+    tier="extra",
     oracle="""
     WITH c AS (
       SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
@@ -1107,6 +1113,7 @@ _RECURSIVE_CAL_SQL = """
 
 @register(
     "sql_recursive_cte_calendar_gaps",
+    tier="extra",
     oracle=_RECURSIVE_CAL_SQL.format(orders="orders"),
     doc="WITH RECURSIVE (Spark 4 surface): generate a 59-day calendar "
     "spine recursively, LEFT JOIN per-day order counts, and flag the "
@@ -1140,6 +1147,7 @@ _LATERAL_TOPK_SQL = """
 
 @register(
     "sql_lateral_topk_nations_per_region",
+    tier="extra",
     oracle=_LATERAL_TOPK_SQL.format(
         region="region", nation="nation", customer="customer"
     ),
@@ -1163,6 +1171,7 @@ def sql_lateral_topk_nations_per_region(spark, sf_dir):
 
 @register(
     "grouping_sets_time_rollup",
+    tier="headline",
     oracle="""
     SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
            CAST(extract(hour FROM ts) AS INT)  AS hr,
@@ -1211,6 +1220,7 @@ def grouping_sets_time_rollup(spark, sf_dir):
 
 @register(
     "window_topk_orders_per_customer",
+    tier="headline",
     oracle="""
     SELECT o_custkey, o_orderkey, o_totalprice, rn
     FROM (
@@ -1479,6 +1489,7 @@ def unpivot_price_measures(spark, sf_dir):
 
 @register(
     "sort_topk_revenue_parts",
+    tier="headline",
     # exact 1e-4-unit bigint revenue fold AND exact-integer ORDERING
     # (q1 discipline, round-15 strict sf1 sweep): ordering on the
     # folded double can flip near-ties between engines at scale — the
@@ -1994,6 +2005,7 @@ def approx_distinct_quantiles(spark, sf_dir):
 
 @register(
     "timeseries_resample_ffill",
+    tier="extra",
     oracle="""
     WITH users AS (
       SELECT DISTINCT user_id FROM events WHERE user_id % 30 = 0
@@ -2316,6 +2328,7 @@ def udtf_sentence_explode(spark, sf_dir):
 
 @register(
     "set_bag_ops_shipyear",
+    tier="extra",
     oracle="""
     SELECT 'except_all' AS op, l_returnflag,
            CAST(count(*) AS BIGINT) AS n
@@ -2373,6 +2386,7 @@ def set_bag_ops_shipyear(spark, sf_dir):
 
 @register(
     "join_null_safe_priority",
+    tier="extra",
     oracle="""
     WITH l AS (
       SELECT o_orderkey, nullif(o_orderpriority, '1-URGENT') AS pk
@@ -2422,6 +2436,7 @@ def join_null_safe_priority(spark, sf_dir):
 
 @register(
     "map_higher_order_funcs",
+    tier="extra",
     oracle="""
     WITH m AS (
       SELECT l_returnflag,
@@ -2500,6 +2515,7 @@ def map_higher_order_funcs(spark, sf_dir):
 
 @register(
     "sql_group_order_by_all",
+    tier="extra",
     oracle="""
     SELECT o_orderstatus, o_orderpriority,
            CAST(count(*) AS BIGINT) AS n,
@@ -2533,6 +2549,7 @@ def sql_group_order_by_all(spark, sf_dir):
 
 @register(
     "agg_listagg_within_group",
+    tier="extra",
     oracle="""
     SELECT r_name,
            string_agg(n_name, ',' ORDER BY n_name) AS nations,
@@ -2565,6 +2582,7 @@ def agg_listagg_within_group(spark, sf_dir):
 
 @register(
     "scalar_try_functions",
+    tier="extra",
     oracle="""
     SELECT CAST(count(*) AS BIGINT) AS n_rows,
            CAST(sum(CASE WHEN p_size = 25 THEN 1 ELSE 0 END) AS BIGINT)
@@ -2624,6 +2642,7 @@ def scalar_try_functions(spark, sf_dir):
 
 @register(
     "udf_arrow_scalar_margin",
+    tier="extra",
     oracle="""
     SELECT l_returnflag,
            CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
@@ -2692,6 +2711,7 @@ def udf_arrow_scalar_margin(spark, sf_dir):
 
 @register(
     "agg_bitwise_checksum_bitmap",
+    tier="extra",
     oracle="""
     SELECT l_returnflag,
            CAST(bit_or(1 << l_linenumber) AS BIGINT) AS linenum_bitmap,

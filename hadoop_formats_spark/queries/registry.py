@@ -20,14 +20,19 @@ class QuerySpec:
     builder: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     doc: str = ""
+    tier: str | None = None  # bench.py row set: "headline", "extra" or None
 
 
 QUERIES: dict[str, QuerySpec] = {}
+TIERS = ("headline", "extra", None)
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str | None = None, doc: str = "", tier: str | None = None):
+    if tier not in TIERS:
+        raise ValueError(f"query {name!r}: tier {tier!r} is not one of {TIERS}")
+
     def deco(fn):
-        QUERIES[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""))
+        QUERIES[name] = QuerySpec(name, fn, oracle, doc or (fn.__doc__ or ""), tier)
         return fn
 
     return deco
@@ -144,102 +149,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# The driver's correctness gate checks the FIRST 50 entries of
-# ``queries()`` (dict insertion order).  PRIORITY_ORDER picks that
-# window: never-graded queries first, then post-fix non-green ones,
-# then changed-code-first, then oldest-green round-robin across
-# families.  ``tools/next_window.py`` computes it from git history and
-# the CORRECTNESS_r*.json archive; every query not listed follows in
-# registration order.
-PRIORITY_ORDER = [
-    "scan_shingle_checksum_canary",  # never-graded (new in r17)
-    "multimodal_png_real_decode",  # never-graded (new in r15)
-    "dedup_winnow_chunked_pairs",  # never-graded (new in r15)
-    "stream_ohlc_candles",  # never-graded (new in r15)
-    "multimodal_tiff_real_decode",  # never-graded (new in r15)
-    "q1_pricing_summary",  # r15: exact bigint-unit money folds
-    "join_5way_region_rollup_revenue",  # r15: exact revenue fold
-    "sort_topk_revenue_parts",  # r15: exact fold + integer ordering
-    "udf_pandas_scalar_charge",  # r15: UDF emits exact 1e-6 units
-    "window_range_frame_spend",  # r15: exact cents frame sum
-    "seqfile_roundtrip_double_sum",  # r15: exact cents total
-    "parquet_partitioned_pruned_read",  # r15: exact cents total
-    "agg_having",  # r15: exact cents avg (proactive)
-    "mv_incremental_maintenance",  # r15: exact IVM folds + exact certificate
-    "text_quality_score",  # r15: floor-form quality quantize
-    "pareto_frontier_quality_length",  # r15: floor-form quality
-    "sample_weighted_quality",  # r15: floor-form quality
-    "timeseries_downsample_ohlc",  # r15: sign-safe okey (same values)
-    "dedup_winnow_fingerprint_pairs",  # r15: shared pair-tail refactor
-    "session_entry_exit_flows",  # changed since r08: span hadoop_formats_spark/queries/ext.py:4525-4616
-    "stream_ttl_band_registry",  # changed since r11: module hadoop_formats_spark/streaming/__init__.py
-    "stream_attribution_last_touch",  # changed since r09: module hadoop_formats_spark/streaming/__init__.py
-    "stream_tws_running_stats",  # changed since r10: module hadoop_formats_spark/streaming/__init__.py
-    "stream_foreach_batch_upsert",  # changed since r10: module hadoop_formats_spark/streaming/__init__.py
-    "seqfile_stream_source_counts",  # changed since r06: module hadoop_formats_spark/streaming/__init__.py
-    "contamination_ngram_overlap",  # changed since r10: module hadoop_formats_spark/operators/dedup.py
-    "dedup_incremental_batch",  # changed since r12: module hadoop_formats_spark/operators/dedup.py
-    "dedup_chunk_boilerplate",  # changed since r10: module hadoop_formats_spark/operators/dedup.py
-    "dedup_substring_spans",  # changed since r08: module hadoop_formats_spark/operators/dedup.py
-    "dedup_containment_excerpts",  # changed since r08: module hadoop_formats_spark/operators/dedup.py
-    "seqfile_record_layout_roundtrip",  # oldest-green r04 [seqfile]
-    "stream_tumbling_hourly_counts",  # oldest-green r05 [stream]
-    "join_asof_purchase_last_click",  # oldest-green r06 [join]
-    "text_bigram_lm_score",  # oldest-green r06 [text]
-    "q18_large_volume_customer",  # oldest-green r06 [tpch]
-    "abtest_cuped_adjusted",  # oldest-green r08 [abtest]
-    "intervals_merge_coverage",  # oldest-green r08 [intervals]
-    "link_fuzzy_customer_names",  # oldest-green r08 [link]
-    "map_constructor_lookup",  # oldest-green r08 [map]
-    "null_handling_fill_nullsafe",  # oldest-green r08 [null]
-    "projection_compute",  # oldest-green r08 [projection]
-    "rollup_region_nation",  # oldest-green r08 [rollup]
-    "scd2_point_in_time_join",  # oldest-green r08 [scd2]
-    "set_union_distinct",  # oldest-green r08 [set]
-    "sketch_kmv_jaccard_intersect",  # oldest-green r08 [sketch]
-    "sort_multikey_nulls",  # oldest-green r08 [sort]
-    "stats_decayed_engagement",  # oldest-green r08 [stats]
-    "struct_map_collect",  # oldest-green r08 [struct]
-    "subquery_scalar_near_max",  # oldest-green r08 [subquery]
-    "timeseries_ewma_anomaly",  # oldest-green r08 [timeseries]
-    "unpivot_price_measures",  # oldest-green r08 [unpivot]
-    "window_lag_lead_order_gaps",  # oldest-green r08 [window]
-    "agg_exact_percentiles",  # oldest-green r09 [agg]
-    "attribution_last_touch",  # oldest-green r09 [attribution]
-    "embedding_covariance_pca",  # oldest-green r09 [embedding]
-    "feature_target_encoding_oof",  # oldest-green r09 [feature]
-    "funnel_conversion",  # oldest-green r09 [funnel]
-    "graph_bfs_distances",  # oldest-green r09 [graph]
-    "json_from_json_struct",  # oldest-green r09 [json]
-    "layout_zorder_clustering",  # oldest-green r09 [layout]
-    "math_conditional",  # oldest-green r09 [math]
-    "orc_write_roundtrip",  # oldest-green r09 [orc]
-    "pack_sequences_stats",  # oldest-green r09 [pack]
-    "parquet_schema_evolution",  # oldest-green r09 [parquet]
-    "privacy_l_diversity",  # oldest-green r09 [privacy]
-    "sample_domain_quota",  # oldest-green r09 [sample]
-    "array_higher_order_funcs",  # oldest-green r10 [array]
-    "bpe_apply_compression",  # oldest-green r10 [bpe]
-]
-
-
-def _ordered() -> list[str]:
-    rank = {name: i for i, name in enumerate(PRIORITY_ORDER)}
-    rest = [n for n in QUERIES if n not in rank]
-    # dict.fromkeys: defensive dedupe so an accidental PRIORITY_ORDER
-    # double-entry can never yield a duplicate name (ADVICE r15)
-    return [
-        n for n in dict.fromkeys(PRIORITY_ORDER) if n in QUERIES
-    ] + rest
-
-
 def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name].builder for name in _ordered()}
+    return {name: spec.builder for name, spec in QUERIES.items()}
 
 
 def oracle_sql_map() -> dict[str, str]:
-    return {
-        name: QUERIES[name].oracle
-        for name in _ordered()
-        if QUERIES[name].oracle is not None
-    }
+    return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle is not None}

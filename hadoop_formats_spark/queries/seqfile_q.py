@@ -71,6 +71,7 @@ def seqfile_reference_first_keys(spark, sf_dir):
 
 @register(
     "seqfile_roundtrip_returnflag_counts",
+    tier="headline",
     oracle="""
     SELECT l_returnflag AS value, count(*) AS n,
            CAST(sum(l_orderkey) AS BIGINT) AS key_sum
@@ -435,6 +436,7 @@ def _mapfile_orders_dir(spark, sf_dir: str) -> str:
 
 @register(
     "mapfile_range_scan",
+    tier="extra",
     oracle="""
     SELECT count(*) AS n,
            round(sum(o_totalprice), 2) AS total,
@@ -514,6 +516,7 @@ def _bloommap_even_orders_dir(spark, sf_dir: str) -> str:
 
 @register(
     "bloommap_probe_batch",
+    tier="extra",
     oracle="""
     SELECT CAST(count(*) AS BIGINT) AS n_found,
            round(sum(o_totalprice), 2) AS sum_found,
@@ -566,6 +569,7 @@ def _setfile_ledger_dir(spark, sf_dir: str) -> str:
 
 @register(
     "setfile_dedup_ledger",
+    tier="extra",
     oracle="""
     WITH fps AS (
       SELECT doc_id,
@@ -633,6 +637,7 @@ def _tombstone_dir(spark, sf_dir: str) -> str:
 
 @register(
     "gdpr_forget_users",
+    tier="extra",
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_events,
@@ -704,6 +709,7 @@ def _mapfile_sparse_orders_dir(spark, sf_dir: str) -> str:
 
 @register(
     "mapfile_get_closest_lookup",
+    tier="extra",
     oracle="""
     WITH stored AS (
       SELECT CAST(o_orderkey AS BIGINT) AS k, o_totalprice AS v
@@ -819,6 +825,7 @@ def _sorter_merged_dir(spark, sf_dir: str) -> str:
 
 @register(
     "seqfile_sorter_merge_runs",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT min(o_orderkey) AS lo, max(o_orderkey) AS hi FROM orders
@@ -881,6 +888,7 @@ def seqfile_sorter_merge_runs(spark, sf_dir):
 
 @register(
     "seqfile_binary_payload_roundtrip",
+    tier="extra",
     oracle="""
     SELECT CAST(count(*) AS BIGINT) AS n,
            CAST(sum(octet_length(encode(text))) AS BIGINT) AS total_bytes,

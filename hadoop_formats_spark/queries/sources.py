@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hadoop_formats_spark.cachedir import cache_path, materialize, sf_key
+from hadoop_formats_spark.cachedir import materialize, sf_key
 
 from .registry import register, table
 
@@ -128,6 +128,7 @@ def orc_write_roundtrip(spark, sf_dir):
 
 @register(
     "xml_write_read_roundtrip",
+    tier="extra",
     oracle="""
     SELECT n_regionkey,
            CAST(count(*) AS BIGINT) AS n,
@@ -176,6 +177,7 @@ def xml_write_read_roundtrip(spark, sf_dir):
 
 @register(
     "partition_overwrite_dynamic",
+    tier="extra",
     oracle="""
     WITH yrs AS (
       SELECT CAST(extract(year FROM o_orderdate) AS INT) AS yr,
@@ -245,6 +247,7 @@ def _dynamic_backfill(spark, sf_dir: str, tmp: str) -> None:
 
 @register(
     "compact_small_files",
+    tier="extra",
     oracle="""
     SELECT CAST(16 AS BIGINT) AS n_files_before,
            CAST(ceil(count(*) / 20000.0) AS BIGINT) AS n_files_after,
@@ -346,6 +349,40 @@ def parquet_schema_evolution(spark, sf_dir):
     )
 
 
+def _bucketed_table(spark, df, name: str, col: str, parts: tuple[str, ...]):
+    """``df`` as a parquet table bucketed and sorted by ``col`` into 8
+    buckets, built once under the cache and registered in each session.
+
+    The build writes the files through a bucketed ``saveAsTable`` and
+    drops the table again (it is external: the files stay).  Every
+    session then registers the published directory; the column list is
+    required, since Spark rejects a bucket spec over an inferred
+    schema."""
+
+    def build(tmp):
+        (
+            # ONE file per bucket (repartition by the bucket key uses
+            # the same murmur3 hash as bucketBy): Spark only elides the
+            # read-side sort when every bucket is a single sorted file
+            df.repartition(8, col)
+            .write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(8, col)
+            .sortBy(col)
+            .option("path", tmp)
+            .saveAsTable(name)
+        )
+        spark.sql(f"DROP TABLE {name}")
+
+    path = materialize(parts, build)
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet "
+        f"CLUSTERED BY ({col}) SORTED BY ({col}) INTO 8 BUCKETS LOCATION '{path}'"
+    )
+    return spark.table(name)
+
+
 @register(
     "layout_bucketed_join_no_shuffle",
     oracle="""
@@ -372,36 +409,20 @@ def parquet_schema_evolution(spark, sf_dir):
 )
 def layout_bucketed_join_no_shuffle(spark, sf_dir):
     key = sf_key(sf_dir).replace(".", "_")
-    ot, lt = f"bkt_orders_{key}", f"bkt_lineitem_{key}"
-    if not spark.catalog.tableExists(ot):
-        (
-            table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderstatus")
-            # ONE file per bucket (repartition by the bucket key uses
-            # the same murmur3 hash as bucketBy): Spark only elides the
-            # read-side sort when every bucket is a single sorted file
-            .repartition(8, "o_orderkey")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", cache_path("fmt_cache", key, "bkt_orders"))
-            .saveAsTable(ot)
-        )
-    if not spark.catalog.tableExists(lt):
-        (
-            table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount")
-            .repartition(8, "l_orderkey")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", cache_path("fmt_cache", key, "bkt_lineitem"))
-            .saveAsTable(lt)
-        )
-    o = spark.table(ot)
-    li = spark.table(lt)
+    o = _bucketed_table(
+        spark,
+        table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus"),
+        f"bkt_orders_{key}",
+        "o_orderkey",
+        ("fmt_cache", key, "bkt_orders"),
+    )
+    li = _bucketed_table(
+        spark,
+        table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount"),
+        f"bkt_lineitem_{key}",
+        "l_orderkey",
+        ("fmt_cache", key, "bkt_lineitem"),
+    )
     # hint("merge") pins SortMergeJoin so the bucketed layout is what
     # gets exercised (a broadcast join at toy scale would also be
     # shuffle-free, but for the wrong reason)
@@ -466,6 +487,7 @@ def zorder_orders_path(spark, sf_dir: str, nfiles: int = 8) -> str:
 
 @register(
     "layout_zorder_pruned_scan",
+    tier="extra",
     oracle="""
     SELECT count(*) AS n_orders,
            CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -537,6 +559,7 @@ def _quarantine_dirs(spark, sf_dir: str) -> tuple[str, str]:
 
 @register(
     "dq_quarantine_split_sink",
+    tier="extra",
     oracle="""
     WITH flagged AS (
       SELECT CASE WHEN event_type = 'error' OR value > 400

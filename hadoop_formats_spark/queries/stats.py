@@ -98,6 +98,7 @@ def stats_column_profile(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_join_key_skew",
+    tier="extra",
     oracle="""
     WITH freq AS (
       SELECT o_custkey AS key, count(*) AS n
@@ -159,6 +160,7 @@ def stats_join_key_skew(spark: SparkSession, sf_dir: str):
 
 @register(
     "dq_constraint_suite",
+    tier="extra",
     oracle="""
     WITH m AS (
       SELECT CAST(count(*) AS DOUBLE) AS n_rows,
@@ -251,6 +253,7 @@ def dq_constraint_suite(spark, sf_dir):
 
 @register(
     "stats_outlier_zscore",
+    tier="extra",
     oracle="""
     WITH s AS (
       SELECT event_type, avg(value) AS m, stddev_samp(value) AS sd,
@@ -300,6 +303,7 @@ def stats_outlier_zscore(spark, sf_dir):
 
 @register(
     "stats_quantile_normalize",
+    tier="extra",
     oracle="""
     SELECT event_id, event_type, value,
            round(percent_rank() OVER (PARTITION BY event_type
@@ -363,6 +367,7 @@ _HLL_EST_SQL = f"""
 
 @register(
     "sketch_hll_distinct_merge",
+    tier="extra",
     oracle=f"""
     WITH raw AS ({_HLL_REG_SQL}),
     regs AS (
@@ -468,6 +473,7 @@ def sketch_hll_distinct_merge(spark, sf_dir):
 
 @register(
     "sketch_histogram_quantiles",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi
@@ -606,6 +612,7 @@ def sketch_histogram_quantiles(spark, sf_dir):
 
 @register(
     "privacy_k_anonymity",
+    tier="extra",
     oracle="""
     WITH cells AS (
       SELECT c_nationkey,
@@ -662,6 +669,7 @@ def privacy_k_anonymity(spark, sf_dir):
 
 @register(
     "stats_correlation_matrix",
+    tier="extra",
     oracle="""
     SELECT 'quantity_price' AS pair,
            round(corr(l_quantity, l_extendedprice), 6) AS pearson_r
@@ -703,6 +711,7 @@ def stats_correlation_matrix(spark, sf_dir):
 
 @register(
     "stats_outlier_mad",
+    tier="extra",
     oracle="""
     WITH med AS (
       SELECT event_type, median(value) AS med,
@@ -771,6 +780,7 @@ def stats_outlier_mad(spark, sf_dir):
 
 @register(
     "stats_psi_drift",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT CAST(epoch(min(ts)) AS BIGINT) AS e0,
@@ -876,6 +886,7 @@ def stats_psi_drift(spark, sf_dir):
 
 @register(
     "stats_markov_transitions",
+    tier="extra",
     oracle="""
     WITH seq AS (
       SELECT user_id, event_type,
@@ -926,6 +937,7 @@ def stats_markov_transitions(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_decayed_engagement",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT max(CAST(floor(epoch(ts)) AS BIGINT)) AS tmax FROM events
@@ -981,6 +993,7 @@ def stats_decayed_engagement(spark: SparkSession, sf_dir: str):
 
 @register(
     "abtest_cuped_adjusted",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT CAST(floor((floor(epoch(min(ts))) + floor(epoch(max(ts))))
@@ -1104,6 +1117,7 @@ def _pois_case_sql(u_expr: str) -> str:
 
 @register(
     "abtest_bootstrap_ci",
+    tier="extra",
     oracle=f"""
     WITH per_user AS (
       SELECT user_id,
@@ -1237,6 +1251,7 @@ def abtest_bootstrap_ci(spark: SparkSession, sf_dir: str):
 
 @register(
     "abtest_srm_chisquare",
+    tier="extra",
     oracle="""
     WITH armed AS (
       SELECT DISTINCT user_id,
@@ -1311,6 +1326,7 @@ def abtest_srm_chisquare(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_winsorized_segment_spend",
+    tier="extra",
     oracle="""
     WITH j AS (
       SELECT c.c_mktsegment AS segment, o.o_totalprice AS price
@@ -1389,6 +1405,7 @@ def stats_winsorized_segment_spend(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_hhi_concentration",
+    tier="extra",
     oracle="""
     WITH srev AS (
       SELECT n.n_name, l.l_suppkey,
@@ -1458,6 +1475,7 @@ def stats_hhi_concentration(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_gini_brand_revenue",
+    tier="extra",
     oracle="""
     WITH prev AS (
       SELECT p.p_brand, l.l_partkey,
@@ -1543,6 +1561,7 @@ def stats_gini_brand_revenue(spark: SparkSession, sf_dir: str):
 
 @register(
     "timeseries_seasonal_dow_anomaly",
+    tier="extra",
     oracle="""
     WITH daily AS (
       SELECT event_type, date_trunc('day', ts) AS d,
@@ -1621,6 +1640,7 @@ def timeseries_seasonal_dow_anomaly(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_benford_first_digit",
+    tier="extra",
     oracle="""
     WITH d AS (
       SELECT CAST(regexp_extract(CAST(o_totalprice AS VARCHAR), '[1-9]')
@@ -1688,6 +1708,7 @@ def stats_benford_first_digit(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_ks_two_sample",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT CAST(floor((floor(epoch(min(ts))) + floor(epoch(max(ts))))
@@ -1833,6 +1854,7 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str):
 
 @register(
     "privacy_l_diversity",
+    tier="extra",
     oracle="""
     WITH cells AS (
       SELECT c.c_mktsegment, c.c_nationkey,
@@ -2205,6 +2227,7 @@ def abtest_power_analysis(spark: SparkSession, sf_dir: str):
 
 @register(
     "abtest_mann_whitney_u",
+    tier="extra",
     oracle="""
     WITH s AS (
       SELECT c.c_mktsegment AS seg,
@@ -2431,6 +2454,7 @@ def _per_arm_look_moments(spark: SparkSession, sf_dir: str, K: int = 5):
 
 @register(
     "abtest_sequential_obf",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT min(CAST(floor(epoch(ts)) AS BIGINT)) AS mn,
@@ -2554,6 +2578,7 @@ _MSPRT_TAU_CENTS = 5000.0
 
 @register(
     "abtest_msprt_always_valid",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT min(CAST(floor(epoch(ts)) AS BIGINT)) AS mn,
@@ -2687,6 +2712,7 @@ def abtest_msprt_always_valid(spark: SparkSession, sf_dir: str):
 
 @register(
     "abtest_welch_ttest",
+    tier="extra",
     oracle="""
     WITH s AS (
       SELECT c.c_mktsegment AS seg,
@@ -2801,6 +2827,7 @@ _BH_Z_M5_A10 = (2.326348, 2.053749, 1.880794, 1.750686, 1.644854)
 
 @register(
     "abtest_bh_fdr_segments",
+    tier="extra",
     oracle="""
     WITH s AS (
       SELECT c.c_mktsegment AS seg,
@@ -2961,6 +2988,7 @@ def abtest_bh_fdr_segments(spark: SparkSession, sf_dir: str):
 
 @register(
     "privacy_dp_laplace_counts",
+    tier="extra",
     oracle="""
     WITH t AS (
       SELECT c_mktsegment AS segment, CAST(count(*) AS BIGINT) AS true_n
@@ -3034,6 +3062,7 @@ def privacy_dp_laplace_counts(spark: SparkSession, sf_dir: str):
 
 @register(
     "stats_chi_square_independence",
+    tier="extra",
     oracle="""
     WITH cells AS (
       SELECT c.c_mktsegment AS seg, o.o_orderpriority AS pri,
@@ -3132,6 +3161,7 @@ def stats_chi_square_independence(spark: SparkSession, sf_dir: str):
 
 @register(
     "dq_volume_anomaly_daily",
+    tier="extra",
     oracle="""
     WITH present AS (
       SELECT CAST(o_orderdate AS DATE) AS day,
@@ -3244,6 +3274,7 @@ def dq_volume_anomaly_daily(spark: SparkSession, sf_dir: str):
 
 @register(
     "abtest_experiment_readout_capstone",
+    tier="extra",
     oracle="""
     WITH b AS (
       SELECT CAST(floor((floor(epoch(min(ts))) + floor(epoch(max(ts))))

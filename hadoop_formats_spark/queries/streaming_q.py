@@ -54,6 +54,7 @@ from .registry import register  # noqa: E402
 
 @register(
     "stream_tumbling_hourly_counts",
+    tier="headline",
     oracle="""
     SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
            event_type,
@@ -181,6 +182,7 @@ def stream_dedup_by_user_type(spark, sf_dir):
 
 @register(
     "stream_dedup_within_watermark",
+    tier="extra",
     oracle="""
     SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM (
       SELECT DISTINCT user_id, event_type, date_trunc('hour', ts) AS hr
@@ -263,6 +265,7 @@ def stream_stateful_user_stats(spark, sf_dir):
 
 @register(
     "stream_stream_join_click_to_purchase",
+    tier="headline",
     oracle="""
     SELECT c.user_id, count(*) AS n_pairs
     FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
@@ -314,6 +317,7 @@ def stream_stream_join_click_to_purchase(spark, sf_dir):
 
 @register(
     "stream_stream_left_outer_unconverted",
+    tier="extra",
     oracle="""
     WITH c AS (
       SELECT event_id AS click_id, user_id, ts FROM events
@@ -541,6 +545,7 @@ _BANDS_ORACLE_CTE = (
 
 @register(
     "stream_minhash_band_dedup",
+    tier="extra",
     oracle=f"""
     WITH {_BANDS_ORACLE_CTE},
     own AS (
@@ -665,6 +670,7 @@ def stream_static_join_enrichment(spark, sf_dir):
 
 @register(
     "stream_chained_windowed_aggs",
+    tier="extra",
     oracle="""
     WITH mx AS (SELECT max(ts) AS m FROM events),
     hourly AS (
@@ -726,6 +732,7 @@ from .stats import _HLL_EST_SQL, _HLL_M, _HLL_WIDTH  # noqa: E402
 
 @register(
     "stream_hll_distinct_users",
+    tier="extra",
     oracle=f"""
     WITH regs AS (
       SELECT grp_rf, register, max(rank) AS maxrank FROM (
@@ -796,6 +803,7 @@ def stream_hll_distinct_users(spark, sf_dir):
 
 @register(
     "stream_ttl_band_registry",
+    tier="extra",
     oracle=f"""
     WITH {_BANDS_ORACLE_CTE}
     SELECT band_id,
@@ -879,6 +887,7 @@ def stream_ttl_band_registry(spark, sf_dir):
 
 @register(
     "stream_attribution_last_touch",
+    tier="extra",
     oracle="""
     WITH base AS (
       SELECT user_id, ts, event_id, event_type, value
@@ -1060,13 +1069,11 @@ def stream_tws_running_stats(spark, sf_dir):
     "Delta/Iceberg MERGE INTO with the same discipline.",
 )
 def stream_foreach_batch_upsert(spark, sf_dir):
-    import uuid
-
-    from hadoop_formats_spark.cachedir import cache_path
+    from hadoop_formats_spark.cachedir import run_dir
 
     from ..streaming import foreach_batch_upsert
 
-    state_dir = cache_path("fbu_" + uuid.uuid4().hex[:10])
+    state_dir = run_dir("fbu_")
     s = _events_stream(spark, sf_dir).select("event_type", "value")
     foreach_batch_upsert(
         s, spark, ["event_type"], ["value"], state_dir
@@ -1083,6 +1090,7 @@ def stream_foreach_batch_upsert(spark, sf_dir):
 
 @register(
     "stream_dq_quarantine_split",
+    tier="extra",
     oracle="""
     WITH flagged AS (
       SELECT CASE WHEN event_type = 'error' OR value > 400
@@ -1113,10 +1121,11 @@ def stream_foreach_batch_upsert(spark, sf_dir):
 )
 def stream_dq_quarantine_split(spark, sf_dir):
     import os
-    import tempfile
+
+    from hadoop_formats_spark.cachedir import run_dir
 
     s = _events_stream(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="dq_split_")
+    base = run_dir("dq_split_")
     cdir, qdir = os.path.join(base, "clean"), os.path.join(base, "quarantine")
     # coalesce(NULL, false): a row where event_type or value is NULL makes
     # the raw predicate NULL — filter(bad)/filter(~bad) would drop it from

@@ -469,15 +469,16 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str):
     oracle="""
     WITH revenue0 AS (
       SELECT l_suppkey AS supplier_no,
-             sum(l_extendedprice * (1 - l_discount)) AS total_revenue
+             sum(CAST(round(l_extendedprice * (1 - l_discount) * 100)
+                 AS BIGINT)) AS revenue_c
       FROM lineitem
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1996-04-01'
       GROUP BY l_suppkey
     )
-    SELECT s_suppkey, s_name, total_revenue
+    SELECT s_suppkey, s_name, CAST(revenue_c AS DOUBLE) / 100.0 AS total_revenue
     FROM supplier JOIN revenue0 ON s_suppkey = supplier_no
-    WHERE total_revenue = (SELECT max(total_revenue) FROM revenue0)
+    WHERE revenue_c = (SELECT max(revenue_c) FROM revenue0)
     ORDER BY s_suppkey
     """,
     doc="TPC-H Q15 (faithful): revenue view reused twice — once grouped, "
@@ -488,18 +489,25 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str):
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
+    # revenue folds as exact bigint cents on both engines (the q5
+    # discipline): the max and the equality against it then compare
+    # integers, which a fold-order-dependent double sum cannot promise
     revenue0 = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(_revenue()).alias("total_revenue")
+        F.sum(F.round(_revenue() * 100).cast("long")).alias("revenue_c")
     )
     # max-revenue row(s) without a second scan: rank over an empty
     # partition spec is a single-reducer op, fine at |suppliers| rows
-    w = Window.orderBy(F.desc("total_revenue"))
+    w = Window.orderBy(F.desc("revenue_c"))
     top = revenue0.withColumn("rk", F.rank().over(w)).filter(F.col("rk") == 1)
     s = table(spark, sf_dir, "supplier")
     return (
         broadcast(top)
         .join(s, top.supplier_no == s.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue")
+        .select(
+            "s_suppkey",
+            "s_name",
+            (F.col("revenue_c").cast("double") / 100.0).alias("total_revenue"),
+        )
         .orderBy("s_suppkey")
     )
 

@@ -1,7 +1,10 @@
 """``cachedir.materialize``: the one build-and-publish path for cached
-fixtures.  No Spark: every ``build`` here writes plain files."""
+fixtures, and ``cachedir.run_dir``.  No Spark: every ``build`` here
+writes plain files."""
 
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -122,3 +125,25 @@ def test_empty_file_is_not_a_hit(root):
 
     assert cachedir.materialize(("seq_cache", "scaled", "x.seq"), build) == str(final)
     assert final.read_bytes() == b"data"
+
+
+def test_run_dir_removed_at_interpreter_exit(tmp_path):
+    code = (
+        "import os\n"
+        "from hadoop_formats_spark.cachedir import run_dir\n"
+        "d = run_dir('fbu_')\n"
+        "os.makedirs(os.path.join(d, 'current'))\n"
+        "open(os.path.join(d, 'current', 'part-0'), 'w').close()\n"
+        "print(d)\n"
+    )
+    env = dict(os.environ, HFS_CACHE_DIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.strip()
+    assert os.path.dirname(out) == str(tmp_path)
+    assert os.listdir(tmp_path) == []

@@ -262,8 +262,9 @@ def test_permissive_mode(spark, tmp_path):
     data[second_sync + 6] ^= 0xFF  # corrupt second block's sync
     p = tmp_path / "corrupt.seq"
     p.write_bytes(bytes(data))
-    # FAILFAST: job fails
-    with pytest.raises(Exception):
+    # FAILFAST: the task fails with the decoder's own error in the
+    # Python exception chain, not a bare JVM error
+    with pytest.raises(Exception, match="SeqFileError"):
         spark.read.format("hadoop_seq").option("split_size", 10**9).load(str(p)).count()
     # PERMISSIVE: first block still readable
     n = (

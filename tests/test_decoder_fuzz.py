@@ -6,8 +6,10 @@ Text values of 100-295 bytes whose lengths take multi-byte VInts) and
 the Hadoop-written files in ``tests/data/jvm/``.  Every truncation
 offset through a file's first block, plus random bit flips, must make
 ``iter_blocks`` and ``iter_block_counts`` either return or raise
-``SeqFileError`` — the one error PERMISSIVE mode catches.  On a
-truncation, the in-process PERMISSIVE reader returns a prefix of the
+``SeqFileError`` — the one error PERMISSIVE mode catches.  The two large
+Hadoop-written files are also truncated at every offset within 64 bytes
+of each section boundary of their second block and of the file end.  On
+a truncation, the in-process PERMISSIVE reader returns a prefix of the
 clean records.  Each example runs under a ``SIGALRM`` guard, so a
 decoder that loops fails the test instead of hanging it."""
 
@@ -113,14 +115,28 @@ def _first_block_end(path: str, data: bytes) -> int:
     return sync if header.block_compression else sync + 20
 
 
-def _permissive_rows(path: str, schema) -> list[tuple]:
-    src = SeqFileDataSource({"path": path, "mode": "PERMISSIVE"})
-    reader = src.reader(schema)
-    rows = []
-    for split in reader.partitions():
-        for batch in reader.read(split):
-            rows.extend(zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()))
-    return rows
+def _permissive_rows(path: str, schema) -> pa.Table | None:
+    """The in-process PERMISSIVE read of ``path``; None when no rows."""
+    reader = SeqFileDataSource({"path": path, "mode": "PERMISSIVE"}).reader(schema)
+    batches = [b for split in reader.partitions() for b in reader.read(split)]
+    return pa.Table.from_batches(batches) if batches else None
+
+
+def _check_truncations(clean_path: str, n_records: int, cut: str, offsets) -> None:
+    """Each truncation of ``clean_path`` walks cleanly or raises
+    ``SeqFileError``, and PERMISSIVE reads a prefix of the clean rows."""
+    data = open(clean_path, "rb").read()
+    schema = SeqFileDataSource({"path": clean_path}).schema()
+    clean = _permissive_rows(clean_path, schema)
+    assert clean.num_rows == n_records
+    for n in offsets:
+        with open(cut, "wb") as f:
+            f.write(data[:n])
+        with _hang_guard():
+            _walk_counts(cut)
+            # PERMISSIVE catches SeqFileError only: any other error escapes
+            rows = _permissive_rows(cut, schema)
+        assert rows is None or rows.equals(clean.slice(0, rows.num_rows)), f"truncated at {n}"
 
 
 @pytest.mark.parametrize(
@@ -134,19 +150,36 @@ def _permissive_rows(path: str, schema) -> list[tuple]:
 def test_every_truncation_through_first_block(tmp_path, layout, codec, long_values):
     clean_path = _writer_output(str(tmp_path / "clean.seq"), layout, codec, long_values)
     data = open(clean_path, "rb").read()
-    clean_src = SeqFileDataSource({"path": clean_path})
-    schema = clean_src.schema()
-    clean = _permissive_rows(clean_path, schema)
-    assert len(clean) == N_RECORDS
-    cut = str(tmp_path / "cut.seq")
-    for n in range(_first_block_end(clean_path, data) + 1):
-        with open(cut, "wb") as f:
-            f.write(data[:n])
-        with _hang_guard():
-            _walk_counts(cut)
-            # PERMISSIVE catches SeqFileError only: any other error escapes
-            rows = _permissive_rows(cut, schema)
-        assert rows == clean[: len(rows)], f"truncated at {n}"
+    end = _first_block_end(clean_path, data)
+    _check_truncations(clean_path, N_RECORDS, str(tmp_path / "cut.seq"), range(end + 1))
+
+
+def _second_block_boundaries(path: str, data: bytes) -> list[int]:
+    """Section boundaries of a BLOCK file's second block: its start, the
+    end of the sync escape, of the sync and of the record count, then
+    the end of each of the four sections' length and bytes."""
+    header = core.read_header(path)
+    assert header.block_compression
+    pos = data.find(core.SYNC_ESCAPE + header.sync, header.header_len + 1)
+    assert pos > 0
+    bounds = [pos, pos + 4, pos + 20]
+    pos += 20
+    _, pos = core.decode_vint(data, pos)  # record count
+    bounds.append(pos)
+    for _ in range(4):
+        size, pos = core.decode_vint(data, pos)
+        pos += size
+        bounds += [pos - size, pos]
+    return bounds
+
+
+@pytest.mark.parametrize("name", ["text-int.seq", "long-double.seq"])
+def test_truncations_past_first_block(tmp_path, name):
+    path = os.path.join(REFERENCE_FIXTURES, name)
+    data = open(path, "rb").read()
+    bounds = _second_block_boundaries(path, data) + [len(data)]
+    offsets = sorted({n for b in bounds for n in range(b - 64, b + 65) if 0 <= n <= len(data)})
+    _check_truncations(path, 100_000, str(tmp_path / "cut.seq"), offsets)
 
 
 @pytest.fixture(scope="module")

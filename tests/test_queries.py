@@ -1758,18 +1758,14 @@ def test_dq_quarantine_null_rows_route_to_exactly_one_side(spark):
     assert df.filter(raw).count() + df.filter(~raw).count() < df.count()
 
 
-def test_next_window_spans_cover_registry():
-    """tools/next_window.py derives changed-code re-grades from each
-    query's registration span; a registration it cannot locate would
-    silently fall out of the rotation (found once: a deferred-import
-    nested registration).  Every registered query must have a span."""
-    import sys
-    sys.path.insert(0, "tools")
-    from next_window import registration_spans
+def test_register_rejects_unknown_tier():
+    """``tier`` names the bench.py row set; a typo must fail at
+    registration instead of silently dropping the row from the bench."""
+    from hadoop_formats_spark.queries.registry import register
 
-    spans = registration_spans()
-    missing = set(QUERIES) - set(spans)
-    assert not missing, f"no registration span for {sorted(missing)}"
+    with pytest.raises(ValueError, match="tier 'headlines'"):
+        register("tier_typo_probe", tier="headlines")
+    assert "tier_typo_probe" not in QUERIES
 
 
 # ---------------------------------------------------------------------------

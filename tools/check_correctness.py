@@ -12,7 +12,8 @@ pins it down:
   Spark's bigint ``"149518877"`` (all 7 round-2 driver failures
   correlated exactly with bare integer sums).  Oracles must
   ``CAST(sum(int) AS BIGINT)``.
-* floats ARE rounded (~6 significant digits here): driver-green r2
+* floats ARE rounded (~6 significant digits in the tolerant hash,
+  ``STRICT = False``, which importers get): driver-green r2
   rows include shuffle-reordered double sums and a pandas weighted
   average (``q1_pricing_summary``; ``udf_pandas_grouped_weighted_avg``
   until r12, when it gained a round-at-source like everything else)
@@ -21,26 +22,20 @@ pins it down:
   digit boundary when the two engines straddle it (the one r2 failure
   not explained by HUGEINT), so money sums should be ``round(.., 2)``
   at the SOURCE on both sides — rounding is part of the query, not
-  tolerance.  Pass ``--strict`` to hash floats raw (``repr``) when
-  separating "ulp noise" from "genuinely different values".
+  tolerance.
 
-Round-13 discipline: run the FULL ``--strict`` sweep at BOTH sf0.01 and
-sf0.001 each round.  Strict failures come in three classes, each with a
-known fix: (1) fold-ordered double money sums → quantize to bigint
-CENTS PER LINE before summing (never round a summed double); (2) ratios
-/ thresholds over two folded sums → keep both operands integer so even
-row-set membership cannot flip (q8/q22); (3) identical doubles that
-ROUND apart because Spark's round() is exact-decimal while DuckDB's is
-scaled-float → use the ``floor(x*100 + 0.5)/100`` form, which cannot
-diverge on identical inputs (sketch_histogram_quantiles).  As of round
-13 the registry is strict-clean at both SFs — keep new queries that way.
+The command line hashes every float raw (``repr``), so ulp noise
+fails here too: run it over every query at both sf0.01 and sf0.001.
+Strict failures come in three classes, each with a known fix: (1)
+fold-ordered double money sums → quantize to bigint CENTS PER LINE
+before summing (never round a summed double); (2) ratios / thresholds
+over two folded sums → keep both operands integer so even row-set
+membership cannot flip (q8/q22); (3) identical doubles that ROUND apart
+because Spark's round() is exact-decimal while DuckDB's is scaled-float
+→ use the ``floor(x*100 + 0.5)/100`` form, which cannot diverge on
+identical inputs (sketch_histogram_quantiles).
 
-Usage: python tools/check_correctness.py [--strict|--loose] [sf_dir] [query ...]
-
-Default mode is WINDOW-STRICT: queries inside the driver's 50-slot
-grading window (the first 50 of ``queries()``) hash floats raw, the
-rest tolerantly.  ``--strict`` forces raw everywhere, ``--loose``
-restores the tolerant hash everywhere.
+Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -150,10 +145,8 @@ def _hash_rows(cols, rows) -> str:
 
 def main() -> int:
     global STRICT
-    argv = [a for a in sys.argv[1:] if a not in ("--strict", "--loose")]
-    force_strict = "--strict" in sys.argv[1:]
-    force_loose = "--loose" in sys.argv[1:]
-    STRICT = force_strict
+    STRICT = True
+    argv = sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -186,18 +179,10 @@ def main() -> int:
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
             )
 
-    # queries inside the driver's 50-slot grading window are hashed
-    # STRICT (raw float repr) by default — any last-ulp divergence must
-    # surface BEFORE the window freezes, not in the driver's grading
-    # (VERDICT r8 #3).  --loose restores tolerant hashing everywhere;
-    # --strict forces raw hashing everywhere.
-    window = set(list(qs)[:50])
     n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if not (force_strict or force_loose):
-            STRICT = name in window
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)

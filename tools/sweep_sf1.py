@@ -1,6 +1,6 @@
 """Strict DuckDB-oracle sweep at the sf1 decade step (round-15 protocol).
 
-Runs ``tools/check_correctness.py --strict`` over the scale-sensitive
+Runs ``tools/check_correctness.py`` (strict hash) over the scale-sensitive
 query set against the builder-side sf1 data (``tools/gen_sf1.py`` →
 ``.scale/sf1``), in FRESH subprocess batches: one 8 GB local[32] JVM
 accumulating ~20 sf1 queries OOMs, so each batch gets its own process
@@ -120,7 +120,7 @@ def main() -> int:
     for batch in BATCHES:
         cmd = [sys.executable, os.path.join(REPO, "tools",
                                             "check_correctness.py"),
-               "--strict", SF1, *batch]
+               SF1, *batch]
         p = subprocess.run(cmd, env=env, capture_output=True, text=True)
         got = 0
         for line in p.stdout.splitlines():
