@@ -11,8 +11,19 @@ from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame) -> str:
-    """The formatted physical plan after AQE planning."""
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The formatted physical plan after AQE planning.  Once AQE has
+    run, each adaptive node prints its "Final Plan" and then its
+    "Initial Plan"; only the final one is kept, or every exchange would
+    be counted twice."""
+    marker = "+- == Initial Plan =="
+    kept, cut = [], None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        if cut is not None and not line[: cut + 1].strip(" :|"):
+            continue  # inside the initial plan's subtree
+        cut = line.find(marker) if marker in line else None
+        if cut is None:
+            kept.append(line)
+    return "\n".join(kept)
 
 
 @dataclass

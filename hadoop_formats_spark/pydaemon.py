@@ -1,23 +1,30 @@
-"""Python worker daemon for this package's sessions
-(``spark.python.daemon.module``, set by ``session.get_spark``).
+"""Zip-import guard for the Python processes Spark launches for this
+package's sessions: task daemons, datasource planner daemons and the
+workers they fork.
 
 PySpark's worker calls ``importlib.invalidate_caches()`` on every task,
-and so does every datasource planner process
-(``pyspark.worker_util.setup_spark_files``).  Before CPython 3.13 that
+and so does every datasource planner process (``schema()`` at
+``load()``, ``partitions()`` at execution, the writer's commit):
+``pyspark.worker_util.setup_spark_files``.  Before CPython 3.13 that
 makes each cached ``zipimporter`` re-read its whole archive directory
 at once; a worker holds 16 of them for ``pyspark.zip`` (1328 entries,
-one importer per imported sub-package), and skipping those re-reads cut
-a one-task identity job from 0.25 s to 0.10 s on ``local[3]`` (SCALE.md
-"Per-task Python floor").  This module re-reads an archive only when
-its ``(mtime, size)`` changed since the last read, as CPython's own
-``FileFinder`` trusts directory mtimes, then runs PySpark's daemon.
-Run as the daemon it installs the guard in itself and the workers it
-forks; importing it changes nothing until ``install()``.
+one importer per imported sub-package).  Skipping those re-reads cut
+a one-task identity job from 0.25 s to 0.10 s, and a fresh
+``hadoop_seq`` read's ``load()`` from about 0.17 s to 0.015 s, on
+``local[3]`` (SCALE.md "Per-task Python floor").  This module re-reads
+an archive only when its ``(mtime, size)`` changed since the last
+read, as CPython's own ``FileFinder`` trusts directory mtimes.
+
+No Spark conf selects the planners' daemon module, so the guard is
+installed at interpreter start instead: ``session.ensure_ready`` puts
+``_worker_site/`` on the workers' ``PYTHONPATH`` (``sc.environment``,
+which every planner and UDF wrapped afterwards carries), and its
+``sitecustomize`` calls ``install()``.  The driver interpreter is left
+alone; importing this module changes nothing until ``install()``.
 """
 
 from __future__ import annotations
 
-import importlib
 import os
 import zipimport
 
@@ -48,13 +55,3 @@ def invalidate_caches(self: zipimport.zipimporter) -> None:
 def install() -> None:
     """Guard ``zipimporter.invalidate_caches`` in this process."""
     zipimport.zipimporter.invalidate_caches = invalidate_caches
-
-
-if __name__ == "__main__":
-    # install from the importable module, not from this ``__main__`` copy
-    from hadoop_formats_spark.pydaemon import install as _install
-    from pyspark import daemon
-
-    _install()
-    importlib.invalidate_caches()  # read each archive once here, not once per forked worker
-    daemon.manager()

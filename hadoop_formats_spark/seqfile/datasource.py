@@ -283,9 +283,11 @@ class SeqFileReader(DataSourceReader):
             # [8 MiB, 128 MiB] (explicit ``split_size`` overrides; on a
             # cluster the 128 MiB cap keeps task counts sane at 100 TB).
             # Every Python-datasource task pays a fixed cost outside
-            # the decode (SCALE.md "Per-task Python floor": mostly
-            # PySpark's per-task zip re-read, which ``pydaemon`` skips),
-            # so small splits are overhead-dominated: measured on the 10M
+            # the decode (SCALE.md "Per-task Python floor": it was mostly
+            # PySpark's per-task zip re-read, which ``pydaemon``'s guard
+            # now skips in tasks and planners alike; about 0.15 s per
+            # task is left on the JVM side of the hand-off), so small
+            # splits are overhead-dominated: measured on the 10M
             # record / 143 MB scaled fixture (local[32], round 5),
             # 2.2 MiB splits ran 8.5 M recs/s, 9 MiB splits 12.0 M,
             # 1.1 MiB splits 5.7 M.  The 8 MiB floor keeps per-task

@@ -16,6 +16,8 @@ import sys
 from pyspark.sql import SparkSession
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# on the workers' PYTHONPATH only: its sitecustomize installs pydaemon's guard
+WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
 
 
 def get_spark(
@@ -47,7 +49,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-        .config("spark.python.daemon.module", "hadoop_formats_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -60,11 +61,18 @@ def ensure_ready(spark: SparkSession) -> None:
     """Register this package's Python datasources (``hadoop_seq`` and
     ``hadoop_map``) on ``spark`` and turn on the filter pushdown their
     readers implement (Spark rejects ``pushFilters`` without it).
+    First, put ``WORKER_SITE`` on the workers' ``PYTHONPATH``: every
+    planner and UDF wrapped from then on carries ``sc.environment``, so
+    their Python processes start with ``pydaemon``'s zip guard.
     Idempotent: registering a name again replaces it.  A registration
     error raises here, not later as DATA_SOURCE_NOT_FOUND."""
     from .seqfile.datasource import SeqFileDataSource
     from .seqfile.map_datasource import MapFileDataSource
 
+    env = spark.sparkContext.environment
+    pypath = env.get("PYTHONPATH", "")
+    if WORKER_SITE not in pypath.split(os.pathsep):
+        env["PYTHONPATH"] = WORKER_SITE + (os.pathsep + pypath if pypath else "")
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     for source in (SeqFileDataSource, MapFileDataSource):
         spark.dataSource.register(source)

@@ -48,6 +48,43 @@ _BARE_SCRIPT = textwrap.dedent(
     rows = E.entry(spark).count()
     print(f"BARE_OK entry rows={{rows}}", flush=True)
     assert rows > 0
+
+    # the readied session's tasks and planners start with the zip guard
+    import pyarrow as pa
+    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
+    def site():
+        import zipimport
+
+        return zipimport.zipimporter.invalidate_caches.__module__
+
+    class Probe(DataSource):
+        @classmethod
+        def name(cls):
+            return "hfs_bare_probe"
+
+        def schema(self):
+            return "planner string"
+
+        def reader(self, schema):
+            return ProbeReader()
+
+    class ProbeReader(DataSourceReader):
+        def partitions(self):  # runs in the plan_data_source_read planner
+            return [InputPartition(site())]
+
+        def read(self, partition):
+            yield (partition.value,)
+
+    def probe(batches):
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({{"m": [site()]}})
+
+    spark.dataSource.register(Probe)
+    planner = spark.read.format("hfs_bare_probe").load().first().planner
+    task = spark.range(1, numPartitions=1).mapInArrow(probe, "m string").first().m
+    print(f"BARE_GUARD task={{task}} planner={{planner}}", flush=True)
     spark.stop()
     print("BARE_ALL_OK", flush=True)
     """
@@ -70,3 +107,5 @@ def test_bare_driver_session_runs_every_format():
     assert "BARE_ALL_OK" in out, out
     for fam in ("mapfile_range_scan", "bloommap_probe_batch", "setfile_dedup_ledger"):
         assert f"BARE_OK {fam}" in out, out
+    guard = "hadoop_formats_spark.pydaemon"
+    assert f"BARE_GUARD task={guard} planner={guard}" in out, out

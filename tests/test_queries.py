@@ -117,6 +117,18 @@ def test_q1_single_shuffle(spark, sf_dir):
     assert plans.shuffle_count(_df(spark, sf_dir, "q1_pricing_summary")) <= 2
 
 
+def test_shuffle_count_is_the_same_after_execution(spark):
+    # after collect() AQE prints its initial plan beside the final one;
+    # only the final plan is counted
+    from pyspark.sql import functions as F
+
+    df = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().orderBy("k")
+    before = plans.shuffle_count(df), plans.broadcast_count(df)
+    df.collect()
+    assert "Initial Plan" not in plans.executed_plan(df)
+    assert (plans.shuffle_count(df), plans.broadcast_count(df)) == before == (2, 0)
+
+
 def test_topk_plans_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plans.executed_plan(
         _df(spark, sf_dir, "sort_topk_revenue_parts")
