@@ -4,10 +4,12 @@ on their ``PYTHONPATH`` only (never on the driver's), so task daemons,
 datasource planner daemons and the workers they fork all start with
 ``pydaemon``'s zip guard installed.
 
-``pydaemon.py`` is loaded by file path under its package name: a bare
-session's workers do not have the package root on their path.  A
-``sitecustomize`` further down ``sys.path`` is run after the guard, as
-if this one were not there."""
+``pydaemon.py`` is loaded by file path under its package name, and the
+package itself is not imported: the hook works whatever else is on the
+path, and a worker imports ``hadoop_formats_spark`` only when a task or
+planner needs it, from the checkout ``ensure_ready`` put next to this
+directory.  A ``sitecustomize`` further down ``sys.path`` is run after
+the guard, as if this one were not there."""
 
 import importlib.machinery
 import importlib.util

@@ -2,9 +2,9 @@
 
 Every cache this engine materializes (timestamp-cast events copies,
 stream-source directories, seqfile/parquet round-trip fixtures, the
-persisted IVF index, the shipped package zip) used to live at fixed
-world-writable ``/tmp/hfs_*`` paths — on a shared host another user
-can pre-create such a path and poison the cache (ADVICE r4).  All of
+persisted IVF index) used to live at fixed world-writable
+``/tmp/hfs_*`` paths — on a shared host another user can pre-create
+such a path and poison the cache (ADVICE r4).  All of
 them now live under ONE per-user root created with mode 0700:
 
 * ``$HFS_CACHE_DIR`` when set (explicit operator choice), else

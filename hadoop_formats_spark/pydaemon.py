@@ -17,10 +17,11 @@ read, as CPython's own ``FileFinder`` trusts directory mtimes.
 
 No Spark conf selects the planners' daemon module, so the guard is
 installed at interpreter start instead: ``session.ensure_ready`` puts
-``_worker_site/`` on the workers' ``PYTHONPATH`` (``sc.environment``,
-which every planner and UDF wrapped afterwards carries), and its
-``sitecustomize`` calls ``install()``.  The driver interpreter is left
-alone; importing this module changes nothing until ``install()``.
+``_worker_site/`` and the checkout root on the workers' ``PYTHONPATH``
+(``sc.environment``, which every planner and UDF wrapped afterwards
+carries), and that directory's ``sitecustomize`` calls ``install()``.
+The driver interpreter is left alone; importing this module changes
+nothing until ``install()``.
 """
 
 from __future__ import annotations

@@ -236,7 +236,6 @@ class RecordBlock:
     count: int
     keys: pa.Array | None
     values: pa.Array | None
-    offset: int = 0  # file offset of the block's sync escape
 
 
 def _read_header(f: io.BufferedIOBase, file_end: int) -> Header:
@@ -418,7 +417,6 @@ def _prefix_mask(rec_lens: np.ndarray, plen: np.ndarray) -> np.ndarray:
 
 @dataclass
 class _RawBlock:
-    offset: int
     count: int
     sections: list[bytes]  # key lengths, keys, value lengths, values (compressed)
 
@@ -433,7 +431,6 @@ def _read_raw_block(
     """Read one record block's raw bytes (``Parser.hs:83-115``).
     Returns None at clean EOF.  The sections of a column that is not
     wanted are seeked past, not read (they stay ``b""``)."""
-    offset = f.tell()
     escape = f.read(4)
     if not escape:
         return None
@@ -457,7 +454,7 @@ def _read_raw_block(
         else:
             f.seek(n, os.SEEK_CUR)
             sections.append(b"")
-    return _RawBlock(offset, count, sections)
+    return _RawBlock(count, sections)
 
 
 def _read_vint_stream(f: io.BufferedIOBase) -> int:
@@ -489,7 +486,7 @@ def _decode_raw(
             decompress(raw.sections[3]),
             raw.count,
         )
-    return RecordBlock(raw.count, keys, values, raw.offset)
+    return RecordBlock(raw.count, keys, values)
 
 
 def read_header(path: str) -> Header:
@@ -629,7 +626,6 @@ def _iter_record_batches(
             buf += more
         return True
 
-    batch_offset = base
     key_parts: list[bytes] = []
     key_lens: list[int] = []
     val_parts: list[bytes] = []
@@ -637,7 +633,7 @@ def _iter_record_batches(
     count = 0
 
     def flush() -> RecordBlock | None:
-        nonlocal key_parts, key_lens, val_parts, val_lens, count, batch_offset
+        nonlocal key_parts, key_lens, val_parts, val_lens, count
         if not count:
             return None
         keys = values = None
@@ -655,10 +651,9 @@ def _iter_record_batches(
                 b"".join(val_parts),
                 count,
             )
-        block = RecordBlock(count, keys, values, batch_offset)
+        block = RecordBlock(count, keys, values)
         key_parts, key_lens, val_parts, val_lens = [], [], [], []
         count = 0
-        batch_offset = base + pos
         return block
 
     # on corruption: yield the records decoded so far FIRST, then raise —

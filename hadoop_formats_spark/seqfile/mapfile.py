@@ -272,26 +272,29 @@ def read_map_dir(
     return t
 
 
-def map_get(path: str, key):
-    """Point lookup: binary-search the index, decode ONE block range,
-    return the value (first match) or None — ``MapFile.Reader.get``."""
-    idx = read_index(path)
-    if not idx.positions:
-        return None
-    if idx.last_key is not None and key > idx.last_key:
-        return None  # beyond this file's keyspace: no block decode
-    i = bisect_right(idx.keys, key) - 1
-    if i < 0:
-        return None
-    start = idx.positions[i]
-    end = idx.positions[i + 1] if i + 1 < len(idx.positions) else idx.data_size
+def seek(path: str, key, *, want_values: bool = True):
+    """``(block, row)`` of the first record whose key equals ``key``, or
+    None: the one block span ``MapIndex.range_bounds(key, key)`` names,
+    scanned in order (``MapFile.Reader.seek``)."""
+    start, end = read_index(path).range_bounds(key, key)
+    if end <= start:
+        return None  # empty index, key past the last key or before the first
     data = os.path.join(path, DATA_FILE)
-    for block in core.iter_blocks(data, start=start, end=end, exact_start=True):
+    for block in core.iter_blocks(
+        data, want_values=want_values, start=start, end=end, exact_start=True
+    ):
         keys = block.keys.to_pylist()
         j = bisect_left(keys, key)
         if j < len(keys) and keys[j] == key:
-            return block.values[j].as_py()
+            return block, j
     return None
+
+
+def map_get(path: str, key):
+    """Point lookup: binary-search the index, decode ONE block range,
+    return the value (first match) or None — ``MapFile.Reader.get``."""
+    hit = seek(path, key)
+    return None if hit is None else hit[0].values[hit[1]].as_py()
 
 
 def map_get_closest(path: str, key, *, before: bool = False):

@@ -21,7 +21,6 @@ tests/test_setfile.py.
 from __future__ import annotations
 
 import os
-from bisect import bisect_left, bisect_right
 
 import pyarrow as pa
 
@@ -55,25 +54,7 @@ def set_contains(path: str, key) -> bool:
     (``map_get`` can't express this — a NullWritable hit IS None.)"""
     if not _bloom.may_contain_any(path, [key]):
         return False
-    idx = mapfile.read_index(path)
-    if not idx.positions:
-        return False
-    if idx.last_key is not None and key > idx.last_key:
-        return False
-    i = bisect_right(idx.keys, key) - 1
-    if i < 0:
-        return False
-    start = idx.positions[i]
-    end = idx.positions[i + 1] if i + 1 < len(idx.positions) else idx.data_size
-    data = os.path.join(path, mapfile.DATA_FILE)
-    for block in core.iter_blocks(
-        data, want_values=False, start=start, end=end, exact_start=True
-    ):
-        ks = block.keys.to_pylist()
-        j = bisect_left(ks, key)
-        if j < len(ks) and ks[j] == key:
-            return True
-    return False
+    return mapfile.seek(path, key, want_values=False) is not None
 
 
 def write_array_dir(

@@ -6,10 +6,6 @@ the format Hadoop's SnappyCodec feeds through its
 ``BlockCompressorStream`` framing (reference: ``cbits/decode.c:76-118``
 decompresses the same chunks via libsnappy).  Both directions run in
 C through pyarrow's bundled Snappy codec; there is no pure-Python path.
-
-The codec is named per call rather than held as a module-level
-``pa.Codec``: ``__spark_entry__`` pickles this package by value for a
-bare driver session, and a ``pa.Codec`` cannot be pickled.
 """
 
 from __future__ import annotations

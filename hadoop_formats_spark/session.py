@@ -15,8 +15,9 @@ import sys
 
 from pyspark.sql import SparkSession
 
+# both on the workers' PYTHONPATH only: the checkout the package is imported
+# from, and the directory whose sitecustomize installs pydaemon's guard
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# on the workers' PYTHONPATH only: its sitecustomize installs pydaemon's guard
 WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
 
 
@@ -29,12 +30,6 @@ def get_spark(
 ) -> SparkSession:
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    # make this package importable in Python workers (executors)
-    pypath = os.environ.get("PYTHONPATH", "")
-    if REPO_ROOT not in pypath.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            REPO_ROOT + (os.pathsep + pypath if pypath else "")
-        )
     if REPO_ROOT not in sys.path:
         sys.path.insert(0, REPO_ROOT)
     builder = (
@@ -48,7 +43,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -58,21 +52,27 @@ def get_spark(
 
 
 def ensure_ready(spark: SparkSession) -> None:
-    """Register this package's Python datasources (``hadoop_seq`` and
-    ``hadoop_map``) on ``spark`` and turn on the filter pushdown their
-    readers implement (Spark rejects ``pushFilters`` without it).
-    First, put ``WORKER_SITE`` on the workers' ``PYTHONPATH``: every
-    planner and UDF wrapped from then on carries ``sc.environment``, so
-    their Python processes start with ``pydaemon``'s zip guard.
-    Idempotent: registering a name again replaces it.  A registration
-    error raises here, not later as DATA_SOURCE_NOT_FOUND."""
+    """Make ``spark`` ready for this package, whoever built it (``get_spark``
+    or a bare driver session); the one place the package reaches Spark's
+    Python workers.
+
+    First, put ``WORKER_SITE`` then ``REPO_ROOT`` at the head of the
+    workers' ``PYTHONPATH`` (``sc.environment``, never the driver's
+    ``os.environ``): every planner and UDF wrapped from then on carries
+    it, so their Python processes start with ``pydaemon``'s zip guard
+    and import the package from this checkout.  Then register the
+    Python datasources (``hadoop_seq`` and ``hadoop_map``) and turn on
+    the filter pushdown their readers implement (Spark rejects
+    ``pushFilters`` without it).  Idempotent: a repeat call rewrites the
+    same path, and registering a name again replaces it.  A
+    registration error raises here, not later as DATA_SOURCE_NOT_FOUND."""
     from .seqfile.datasource import SeqFileDataSource
     from .seqfile.map_datasource import MapFileDataSource
 
     env = spark.sparkContext.environment
-    pypath = env.get("PYTHONPATH", "")
-    if WORKER_SITE not in pypath.split(os.pathsep):
-        env["PYTHONPATH"] = WORKER_SITE + (os.pathsep + pypath if pypath else "")
+    head = (WORKER_SITE, REPO_ROOT)
+    tail = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p and p not in head]
+    env["PYTHONPATH"] = os.pathsep.join([*head, *tail])
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     for source in (SeqFileDataSource, MapFileDataSource):
         spark.dataSource.register(source)

@@ -1,7 +1,8 @@
 """Regression guard for VERDICT r4 "What's wrong" #1: the grading
 driver creates a BARE SparkSession (none of our session.py configs or
 datasource registrations), then calls ``__spark_entry__.queries()``.
-Every registered format must work through ``_ensure_ready`` alone.
+Every registered format must work through ``session.ensure_ready``
+alone, and the session's workers must import this checkout's package.
 
 Runs in a SUBPROCESS so the bare session cannot inherit this test
 session's JVM-side registrations — the exact failure mode that shipped
@@ -50,13 +51,16 @@ _BARE_SCRIPT = textwrap.dedent(
     assert rows > 0
 
     # the readied session's tasks and planners start with the zip guard
+    # and import the package from this checkout
     import pyarrow as pa
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     def site():
         import zipimport
 
-        return zipimport.zipimporter.invalidate_caches.__module__
+        import hadoop_formats_spark
+
+        return [zipimport.zipimporter.invalidate_caches.__module__, hadoop_formats_spark.__file__]
 
     class Probe(DataSource):
         @classmethod
@@ -64,7 +68,7 @@ _BARE_SCRIPT = textwrap.dedent(
             return "hfs_bare_probe"
 
         def schema(self):
-            return "planner string"
+            return "guard string, pkg string"
 
         def reader(self, schema):
             return ProbeReader()
@@ -74,17 +78,19 @@ _BARE_SCRIPT = textwrap.dedent(
             return [InputPartition(site())]
 
         def read(self, partition):
-            yield (partition.value,)
+            yield tuple(partition.value)
 
     def probe(batches):
         for _ in batches:
             pass
-        yield pa.RecordBatch.from_pydict({{"m": [site()]}})
+        guard, pkg = site()
+        yield pa.RecordBatch.from_pydict({{"guard": [guard], "pkg": [pkg]}})
 
     spark.dataSource.register(Probe)
-    planner = spark.read.format("hfs_bare_probe").load().first().planner
-    task = spark.range(1, numPartitions=1).mapInArrow(probe, "m string").first().m
-    print(f"BARE_GUARD task={{task}} planner={{planner}}", flush=True)
+    planner = spark.read.format("hfs_bare_probe").load().first()
+    task = spark.range(1, numPartitions=1).mapInArrow(probe, "guard string, pkg string").first()
+    print(f"BARE_GUARD task={{task.guard}} planner={{planner.guard}}", flush=True)
+    print(f"BARE_PKG task={{task.pkg}} planner={{planner.pkg}}", flush=True)
     spark.stop()
     print("BARE_ALL_OK", flush=True)
     """
@@ -109,3 +115,5 @@ def test_bare_driver_session_runs_every_format():
         assert f"BARE_OK {fam}" in out, out
     guard = "hadoop_formats_spark.pydaemon"
     assert f"BARE_GUARD task={guard} planner={guard}" in out, out
+    pkg = os.path.join(REPO, "hadoop_formats_spark", "__init__.py")
+    assert f"BARE_PKG task={pkg} planner={pkg}" in out, out

@@ -1,7 +1,6 @@
 """Raw Snappy codec tests (round-trip + handwritten vectors + a fuzz of
 the Hadoop-framed codec boundary)."""
 
-import pickle
 import struct
 
 import pytest
@@ -67,24 +66,6 @@ def test_oversized_preamble_raises_before_allocating():
     assert snappy._read_uvarint(stream, 0) == (1 << 32, 5)
     with pytest.raises(snappy.SnappyError, match="preamble claims"):
         snappy.decompress(stream)
-
-
-def test_codec_pickles_by_value():
-    """``__spark_entry__`` ships this package to bare-session workers by
-    value; the codec functions must survive that (a ``pa.Codec`` held
-    at module level cannot be pickled)."""
-    import hadoop_formats_spark
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(hadoop_formats_spark)
-    try:
-        comp, dec = (
-            pickle.loads(cloudpickle.dumps(f))
-            for f in (snappy.compress, snappy.decompress)
-        )
-    finally:
-        cloudpickle.unregister_pickle_by_value(hadoop_formats_spark)
-    assert dec(comp(b"abc" * 100)) == b"abc" * 100
 
 
 def test_compresses_repetitive_input():
